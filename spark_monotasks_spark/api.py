@@ -63,13 +63,18 @@ class SQLContext:
     def register_data_frame_as_table(self, df: DataFrame, name: str) -> None:
         """SQLContext.scala:797 — temp view registration.
 
-        Invalidates the catalog-cache's view record for ``name``: if a
-        user view replaces a catalog table view, a later Tables access
-        must re-register rather than silently skip (ADVICE r8)."""
+        The ten catalog table names (``tables.TABLE_NAMES``) belong to
+        the catalog: a view registered here under one of them lasts only
+        until the next catalog query reads that table, which registers
+        the catalog's view again.  The catalog's view record for
+        ``name`` is invalidated so that re-registration happens."""
         df.createOrReplaceTempView(name)
         tables.invalidate_view_record(self.spark, name)
 
     def drop_temp_table(self, name: str) -> None:
+        """Drop a temp view.  Dropping one of the ten catalog table
+        names (``tables.TABLE_NAMES``) lasts only until the next catalog
+        query reads that table, which registers its view again."""
         self.spark.catalog.dropTempView(name)
         tables.invalidate_view_record(self.spark, name)
 

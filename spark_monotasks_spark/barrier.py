@@ -31,17 +31,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 
-def barrier(df: DataFrame, reliable: bool = False, eager: bool = True) -> DataFrame:
-    """Materialize ``df`` and truncate its lineage (see module doc).
-
-    ``eager=False`` defers materialization to the caller's next action.
-    Measured r7: on AQE plans this is a TRAP — deferred localCheckpoint
-    races AQE's per-stage jobs into recomputing the un-cached state
-    repeatedly (incremental near-dup ingest went 3x slower), so every
-    in-package caller keeps the eager default; the knob exists for
-    non-AQE lineage cuts only."""
+def barrier(df: DataFrame, reliable: bool = False) -> DataFrame:
+    """Materialize ``df`` eagerly and truncate its lineage (see module doc)."""
     if not reliable:
-        return df.localCheckpoint(eager=eager)
+        return df.localCheckpoint(eager=True)
     sc = df.sparkSession.sparkContext
     if sc.getCheckpointDir() is None:
         raise ValueError(
@@ -49,4 +42,4 @@ def barrier(df: DataFrame, reliable: bool = False, eager: bool = True) -> DataFr
             "spark.sparkContext.setCheckpointDir(<durable path>) first "
             "(HDFS/S3 on a cluster — local disk only fakes durability)"
         )
-    return df.checkpoint(eager=eager)
+    return df.checkpoint(eager=True)

@@ -5,23 +5,7 @@ CPU-heavy pipeline/script paths.
 
 from __future__ import annotations
 
-import weakref
-
 from pyspark.sql import DataFrame
-
-#: Per-session memo of the spread guard's partition-count probe, keyed
-#: by the plan's input file set (r9, verdict ask #6).  The exact probe
-#: (``df.rdd.getNumPartitions()``) builds the physical plan AND an RDD
-#: conversion on the driver — ~20-60 ms per call, paid at ~14 hot call
-#: sites per bench pass.  For a NARROW plan over a file scan (every
-#: spread call site: scan + filter/project only, no exchange below),
-#: the partition count is a function of the scan's file set and the
-#: session's split confs alone — identical file set in the same session
-#: always probes to the same number, so the memo changes no decision,
-#: only skips repeated probes.  Weakly keyed: a stopped session drops
-#: its entries.  Plans with no file inputs (local relations) are never
-#: memoized (empty file set is not a stable key).
-_SPLIT_MEMO: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
 
 
 def spread_to_cluster(df: DataFrame, target: int | None = None) -> DataFrame:
@@ -34,21 +18,14 @@ def spread_to_cluster(df: DataFrame, target: int | None = None) -> DataFrame:
     at scale — pins the whole job to a few tasks.  One cheap shuffle of
     the compact source rows unlocks full parallelism.  No-op when the
     scan is already wide enough.
+
+    The split count is asked of ``df`` itself, never inferred from its
+    input files: a coalesced or repartitioned frame over the same files
+    has a different count.  The probe plans ``df`` (~20-80 ms on a
+    4-core host); PySpark caches ``DataFrame.rdd`` on the object, so a
+    frame the catalog caches per session pays that once and ~3 ms after.
     """
     n = target or df.sparkSession.sparkContext.defaultParallelism
-    try:
-        files = df.inputFiles()
-    except Exception:
-        files = []
-    if files:
-        key = frozenset(files)
-        memo = _SPLIT_MEMO.setdefault(df.sparkSession, {})
-        parts = memo.get(key)
-        if parts is None:
-            parts = df.rdd.getNumPartitions()
-            memo[key] = parts
-    else:
-        parts = df.rdd.getNumPartitions()
-    if parts < n:
+    if df.rdd.getNumPartitions() < n:
         return df.repartition(n)
     return df

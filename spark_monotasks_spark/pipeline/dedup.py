@@ -96,27 +96,22 @@ def minhash_signatures(
     text_col: str = "text",
     shingle_k: int = 3,
     num_hashes: int = 64,
-    keep_shingles: bool = False,
 ) -> DataFrame:
-    """Per-doc MinHash signature as (id, sig array<bigint>[, sh]).
+    """Per-doc MinHash signature as (id, sig array<bigint>).
 
-    Shape (r6): explode to (id, shingle) rows, hash each shingle ONCE
-    with codegen ``xxhash64``, then ONE hash aggregate computing all
+    Shape: explode to (id, shingle) rows, hash each shingle ONCE with
+    codegen ``xxhash64``, then ONE hash aggregate computing all
     ``num_hashes`` permutation minima as conditional-free
     ``min(h*a_i + b_i)`` expressions (per-index odd multipliers — the
     multiply-shift universal family; wrap-around long overflow IS the
     mod-2^64, which is why the catalog pins ansi.enabled=false) —
     whole-stage-compiled end to end.  The map-side partial aggregate
     collapses each doc to ``num_hashes`` longs before the exchange
-    (~8·num_hashes bytes/doc — trivial beside the corpus scan), and
-    the interpreted-lambda cost of the earlier zero-shuffle
-    array-fold is gone: measured 1.26 s vs 1.70 s warm (2.3× cold) at
-    sf0.1/64 hashes.  Shapes that measured slower: per-family
-    ``array_min(transform(...))`` folds (interpreted per element),
-    (id, shingle, i) explode through TWO groupBys (~3.7 s —
-    num_hashes× row blowup through a shuffle), and ``xxhash64(h0, i)``
-    inside a nested lambda (~9 s).  ``keep_shingles=True`` keeps the
-    row-local array-fold form (the shingle array must ride along).
+    (~8·num_hashes bytes/doc — trivial beside the corpus scan).  Shapes
+    that measured slower: per-family ``array_min(transform(...))``
+    folds (interpreted per element), (id, shingle, i) explode through
+    TWO groupBys (~3.7 s — num_hashes× row blowup through a shuffle),
+    and ``xxhash64(h0, i)`` inside a nested lambda (~9 s).
     """
     df = _spread(df)
     sh = shingles(F.col(text_col), k=shingle_k)
@@ -125,27 +120,9 @@ def minhash_signatures(
         (rng.randrange(1, 1 << 61) | 1, rng.randrange(1, 1 << 61))
         for _ in range(num_hashes)
     ]
-    if keep_shingles:
-        base = df.select(
-            F.col(id_col).alias("id"),
-            F.transform(sh, lambda s: F.xxhash64(s)).alias("_h0"),
-            sh.alias("sh"),
-        )
-
-        def rehash(a: int, b: int):
-            return lambda h: h * F.lit(a) + F.lit(b)
-
-        sig = F.array(
-            *[
-                F.array_min(F.transform(F.col("_h0"), rehash(a, b)))
-                for a, b in ab
-            ]
-        ).alias("sig")
-        return base.select("id", sig, "sh")
     rows = df.select(F.col(id_col).alias("id"), F.explode_outer(sh).alias("_s"))
     # xxhash64 ignores NULL inputs (hashes to the seed) — keep NULL
-    # shingles NULL so empty/NULL docs get [NULL, ...] signatures like
-    # the array_min form
+    # shingles NULL so empty/NULL docs get [NULL, ...] signatures
     h0 = F.when(F.col("_s").isNull(), F.lit(None).cast("long")).otherwise(
         F.xxhash64(F.col("_s"))
     )

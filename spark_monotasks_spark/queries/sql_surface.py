@@ -24,7 +24,7 @@ def _ctx(spark: SparkSession, sf_dir: str, *tables: str) -> SQLContext:
     """Register ONLY the views this query reads (lazy Tables mapping) —
     one unreadable unrelated file can't fail the query, and at scale no
     scan is planned for data the SQL never touches."""
-    load_tables(spark, sf_dir, register_views=True).register(*tables)
+    load_tables(spark, sf_dir).register(*tables)
     return SQLContext(spark)
 
 

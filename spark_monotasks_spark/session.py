@@ -7,12 +7,13 @@ casts (Cast.scala:28).  Modern Spark 4.x defaults ``spark.sql.ansi.enabled``
 to true, which breaks all of those — so we pin it off.
 
 Scale posture (for the 100 TB cluster this targets, even though tests run
-on local[32]):
+on a local master):
 
 - AQE on (runtime coalescing, skew-join splitting, dynamic broadcast).
 - ``spark.sql.shuffle.partitions`` is only the *initial* number; AQE
   coalesces.  On a real cluster this should be ~2-3x total cores; the
-  env var SPARK_GRAFT_CPUS drives local parallelism.
+  env var SPARK_GRAFT_CPUS drives local parallelism (default: the CPUs
+  this process may run on).
 - Arrow enabled so any pandas-UDF path is vectorized batch transfer.
 - UTC session timezone so timestamp semantics match the DuckDB oracle.
 """
@@ -23,7 +24,7 @@ import os
 
 from pyspark.sql import SparkSession
 
-_DEF_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+from spark_monotasks_spark.tables import PARITY_CONFS
 
 
 def get_spark(
@@ -37,21 +38,12 @@ def get_spark(
     On a cluster, pass ``master=None`` with spark-submit providing the
     master; locally defaults to ``local[$SPARK_GRAFT_CPUS]``.
     """
-    cpus = int(_DEF_CPUS)
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master or f"local[{cpus}]")
         # --- reference-parity semantics (SURVEY §7.4) ---
-        .config("spark.sql.ansi.enabled", "false")
-        # with ANSI off, size(NULL) reverts to the Hive-era -1; NULL is
-        # the sane (and oracle-matching) answer — opt out of that one
-        # legacy quirk while keeping the rest of the lenient semantics
-        .config("spark.sql.legacy.sizeOfNull", "false")
-        .config("spark.sql.session.timeZone", "UTC")
-        # parquet TIMESTAMP(NANOS) (events table) reads as long nanos;
-        # tables.load_table converts to TimestampType (lossless — the
-        # driver data has zero sub-microsecond bits)
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+        .config(map=PARITY_CONFS)
         # --- scale posture ---
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")

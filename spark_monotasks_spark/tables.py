@@ -18,6 +18,15 @@ reads each parquet file only on first access, so a query touching only
 ``lineitem`` can never fail on (or waste planning time over) an
 unrelated table — and at 100 TB no view is registered for data the
 query never reads.
+
+Session state: like the reference's one per-session catalog
+(``SimpleCatalog``, SQLContext.scala:107), the package keeps exactly one
+map from a session to what the catalog knows about it
+(:class:`_SessionState`): the table scan DataFrames already built, and
+which table each catalog temp view currently points at.  The map is
+weakly keyed, so a dropped session takes its state with it.  The base
+tables are immutable fixtures: nothing rewrites a table path in place
+within a session.
 """
 
 from __future__ import annotations
@@ -25,44 +34,40 @@ from __future__ import annotations
 import os
 import weakref
 from collections.abc import Iterator, Mapping
+from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-#: Per-session cache of table DataFrame DEFINITIONS (r8, guide §4/§6).
-#: ``spark.read.parquet`` costs a footer read + schema inference + a
-#: chain of Py4J calls (~60-130 ms warm) and the catalog re-ran it for
-#: every query construction — ~2.5 tables × 96 bench entries per pass.
-#: A real deployment reads tables from a catalog whose relations are
-#: resolved once per session, not re-inferred per query; this cache is
-#: that catalog.  It holds ONLY the unresolved scan plan (path +
-#: schema): execution still scans the parquet files every time, so no
-#: result or data is ever reused across runs.  Keyed weakly by session
-#: (a stopped session's entries are dropped with it) and by sf_dir, so
-#: concurrent scale factors in one session stay distinct.  The base
-#: tables are immutable test fixtures; nothing in the repo rewrites a
-#: table path in place within a session (verified — tests only read).
-_DF_CACHE: "weakref.WeakKeyDictionary[SparkSession, dict[tuple[str, str], DataFrame]]" = (
+
+@dataclass
+class _SessionState:
+    """What the catalog remembers about one session.
+
+    - ``frames``: (realpath of sf_dir, table) -> the table's scan
+      DataFrame.  A cache miss costs a parquet footer read, schema
+      inference and the nanos fix, ~0.1 s; a hit costs nothing.  Only
+      the unresolved scan plan is kept: every execution still reads the
+      files, so no result is reused.
+    - ``views``: view name -> the (realpath of sf_dir, table) the temp
+      view currently points at, so a repeated access skips the
+      ``createOrReplaceTempView`` call (~12 ms) and a change of sf_dir
+      re-registers.
+    """
+
+    frames: dict[tuple[str, str], DataFrame] = field(default_factory=dict)
+    views: dict[str, tuple[str, str]] = field(default_factory=dict)
+
+
+#: The catalog's only session state, keyed weakly by session.
+_SESSIONS: "weakref.WeakKeyDictionary[SparkSession, _SessionState]" = (
     weakref.WeakKeyDictionary()
 )
 
-#: Sessions whose parity confs are already pinned: ensure_parity_confs
-#: paid 4 Py4J conf round-trips per load_table call (~1000 per bench
-#: pass).  All four confs are pinned identically everywhere, so once
-#: per session is enough.
-_PARITY_PINNED: "weakref.WeakSet[SparkSession]" = weakref.WeakSet()
 
-#: Per-session record of which (sf_dir, name) each table VIEW currently
-#: points at, so repeated Tables instances skip the
-#: createOrReplaceTempView Py4J call (~20 ms) when the registered view
-#: is already ours for the same key — and re-register when the sf_dir
-#: changes mid-session (the oracle-parity suite mixes scale factors).
-#: Catalog view names are namespaced away from user views everywhere in
-#: the repo (``_ins_src_*``, test-local names), so skipping a
-#: re-registration of an identical view is unobservable.
-_VIEW_REG: "weakref.WeakKeyDictionary[SparkSession, dict[str, tuple[str, str]]]" = (
-    weakref.WeakKeyDictionary()
-)
+def _state(spark: SparkSession) -> _SessionState:
+    return _SESSIONS.setdefault(spark, _SessionState())
+
 
 TABLE_NAMES = (
     "region",
@@ -83,10 +88,11 @@ BROADCAST_DIMS = frozenset({"region", "nation"})
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-#: Runtime-settable confs the catalog's semantics depend on.  These are
-#: ALSO set by session.get_spark at build time; setting them here too
-#: makes every query self-sufficient on a session we didn't build
-#: (e.g. the external correctness harness' vanilla session):
+#: Runtime-settable confs the catalog's semantics depend on, defined
+#: only here.  session.get_spark applies them at build time;
+#: ensure_parity_confs applies them again at load time, which makes every
+#: query self-sufficient on a session we didn't build (e.g. the external
+#: correctness harness' vanilla session):
 #:
 #: - nanosAsLong: parquet TIMESTAMP(NANOS) (events.ts) otherwise throws
 #:   PARQUET_TYPE_ILLEGAL at read time.
@@ -106,14 +112,10 @@ PARITY_CONFS = {
 def ensure_parity_confs(spark: SparkSession) -> None:
     """Defensively pin reference-parity confs on an existing session.
 
-    No-ops when already set (session.get_spark sets the same values at
-    build time).  All four confs are runtime-settable on Spark 4.
-    Pinning is remembered per session (weak set) so repeated catalog
-    loads skip the conf round-trips.
+    Checked on every call (four conf reads, ~1 ms), so a conf changed
+    mid-session is pinned back by the next catalog load.  No-ops when
+    already set; all four confs are runtime-settable on Spark 4.
     """
-    if spark in _PARITY_PINNED:
-        return
-    all_ok = True
     for key, value in PARITY_CONFS.items():
         try:
             if spark.conf.get(key, None) != value:
@@ -121,13 +123,7 @@ def ensure_parity_confs(spark: SparkSession) -> None:
         except Exception:
             # a future Spark making one of these static shouldn't take
             # down every query; the read below will surface a real error
-            all_ok = False
-    # only remember the session as pinned when every conf was verified
-    # or set without exception — a transiently failed pin is retried on
-    # the next load (ADVICE r8: the pre-cache code re-attempted every
-    # call, and the memo must not weaken that recovery path)
-    if all_ok:
-        _PARITY_PINNED.add(spark)
+            pass
 
 
 def table_path(sf_dir: str, name: str) -> str:
@@ -135,17 +131,17 @@ def table_path(sf_dir: str, name: str) -> str:
 
 
 def invalidate_view_record(spark: SparkSession, name: str) -> None:
-    """Forget that a catalog temp view is registered (ADVICE r8).
+    """Forget that a catalog temp view is registered.
 
     The public api surface (``drop_temp_table`` /
     ``register_data_frame_as_table``) can drop or replace a view named
-    like a catalog table outside Tables' knowledge; without this hook a
-    later Tables access would skip re-registration and SQL would see the
-    replacement (or nothing).  Callers that mutate temp views must
-    invalidate so the next access re-fires createOrReplaceTempView."""
-    reg = _VIEW_REG.get(spark)
-    if reg is not None:
-        reg.pop(name, None)
+    like a catalog table; without this hook a later Tables access would
+    skip re-registration and SQL would see the replacement (or nothing).
+    Callers that mutate temp views must invalidate so the next access
+    re-fires createOrReplaceTempView."""
+    state = _SESSIONS.get(spark)
+    if state is not None:
+        state.views.pop(name, None)
 
 
 def _fix_nanos(df: DataFrame) -> DataFrame:
@@ -176,38 +172,31 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     ensure_parity_confs(spark)
     key = (os.path.realpath(sf_dir), name)
     path = table_path(sf_dir, name)
-    # existence is re-checked on cache HITS too (ADVICE r8): a table
-    # directory removed mid-session then raises the explicit error here
-    # instead of a less helpful scan-time failure.  One local stat per
-    # call — noise next to the Py4J traffic the cache removes.
+    # existence is re-checked on cache hits too: a table directory
+    # removed mid-session then raises the explicit error here instead of
+    # a less helpful scan-time failure
     if not os.path.exists(path):
         raise FileNotFoundError(
             f"table {name!r} not found at {path} — is sf_dir={sf_dir!r} correct?"
         )
-    per_session = _DF_CACHE.setdefault(spark, {})
-    cached = per_session.get(key)
-    if cached is not None:
-        return cached
-    df = _fix_nanos(spark.read.parquet(path))
-    per_session[key] = df
+    frames = _state(spark).frames
+    df = frames.get(key)
+    if df is None:
+        df = frames[key] = _fix_nanos(spark.read.parquet(path))
     return df
 
 
 class Tables(Mapping):
     """Lazy name→DataFrame mapping over the sf_dir parquet tables.
 
-    Each table is read (and its temp view registered, when
-    ``register_views``) on FIRST ACCESS only.  Iteration / ``len`` cover
-    the tables present on disk without loading any of them.
+    Each access returns the session's cached scan (:func:`load_table`)
+    and makes sure the table's temp view points at it.  Iteration /
+    ``len`` cover the tables present on disk without loading any of them.
     """
 
-    def __init__(
-        self, spark: SparkSession, sf_dir: str, register_views: bool = True
-    ) -> None:
+    def __init__(self, spark: SparkSession, sf_dir: str) -> None:
         self._spark = spark
         self._sf_dir = sf_dir
-        self._register_views = register_views
-        self._cache: dict[str, DataFrame] = {}
         self._present = tuple(
             n for n in TABLE_NAMES if os.path.exists(table_path(sf_dir, n))
         )
@@ -218,16 +207,13 @@ class Tables(Mapping):
             )
 
     def __getitem__(self, name: str) -> DataFrame:
-        if name not in self._cache:
-            df = load_table(self._spark, self._sf_dir, name)
-            if self._register_views:
-                key = (os.path.realpath(self._sf_dir), name)
-                reg = _VIEW_REG.setdefault(self._spark, {})
-                if reg.get(name) != key:
-                    df.createOrReplaceTempView(name)
-                    reg[name] = key
-            self._cache[name] = df
-        return self._cache[name]
+        df = load_table(self._spark, self._sf_dir, name)
+        key = (os.path.realpath(self._sf_dir), name)
+        views = _state(self._spark).views
+        if views.get(name) != key:
+            df.createOrReplaceTempView(name)
+            views[name] = key
+        return df
 
     def __iter__(self) -> Iterator[str]:
         return iter(self._present)
@@ -244,9 +230,7 @@ class Tables(Mapping):
         return self
 
 
-def load_tables(
-    spark: SparkSession, sf_dir: str, register_views: bool = True
-) -> Tables:
+def load_tables(spark: SparkSession, sf_dir: str) -> Tables:
     """Lazy-load the test tables; views register on first access.
 
     Mirrors the reference's SimpleCatalog temp-table registration
@@ -254,4 +238,4 @@ def load_tables(
     in modern Spark are the same in-memory name→plan map.
     """
     ensure_parity_confs(spark)
-    return Tables(spark, sf_dir, register_views=register_views)
+    return Tables(spark, sf_dir)

@@ -825,3 +825,57 @@ def test_table_df_cache_per_session_and_sf(spark):
     load_tables(spark, SF_TEST_DIR)["lineitem"]
     n_test = spark.sql("SELECT count(*) AS n FROM lineitem").collect()[0].n
     assert n_test == a1.count()
+
+
+def test_spread_to_cluster_asks_the_frame_it_is_given(spark):
+    """The spread guard probes the split count of the frame it receives:
+    a repartitioned or coalesced frame over the same files as an
+    already-probed scan gets its own answer, not the scan's."""
+    from spark_monotasks_spark.partitioning import spread_to_cluster
+    from spark_monotasks_spark.tables import load_table
+    from tests.conftest import SF_TEST_DIR
+
+    n = spark.sparkContext.defaultParallelism
+    docs = load_table(spark, SF_TEST_DIR, "documents")
+    spread_to_cluster(docs)
+    wide = docs.repartition(2 * n)
+    assert spread_to_cluster(wide) is wide
+    narrow = docs.coalesce(1)
+    spread = spread_to_cluster(narrow)
+    assert spread is not narrow
+    assert spread.rdd.getNumPartitions() == n
+
+
+def test_load_table_pins_parity_confs_changed_mid_session(spark):
+    """A parity conf flipped mid-session is pinned back by the next
+    catalog load, not only by the session's first one."""
+    from spark_monotasks_spark.tables import load_table
+    from tests.conftest import SF_TEST_DIR
+
+    key = "spark.sql.ansi.enabled"
+    load_table(spark, SF_TEST_DIR, "lineitem")
+    try:
+        spark.conf.set(key, "true")
+        load_table(spark, SF_TEST_DIR, "lineitem")
+        assert spark.conf.get(key) == "false"
+    finally:
+        spark.conf.set(key, "false")
+
+
+def test_catalog_view_names_belong_to_the_catalog(spark, ctx):
+    """A user view registered or dropped under a catalog table name lasts
+    until the next catalog access, which registers the table's view
+    again."""
+    from spark_monotasks_spark.tables import load_table, load_tables
+    from tests.conftest import SF_TEST_DIR
+
+    n = load_table(spark, SF_TEST_DIR, "region").count()
+    load_tables(spark, SF_TEST_DIR)["region"]
+    ctx.register_data_frame_as_table(spark.range(1), "region")
+    assert ctx.sql("SELECT count(*) AS n FROM region").first().n == 1
+    load_tables(spark, SF_TEST_DIR)["region"]
+    assert ctx.sql("SELECT count(*) AS n FROM region").first().n == n
+    ctx.drop_temp_table("region")
+    assert "region" not in ctx.table_names()
+    load_tables(spark, SF_TEST_DIR)["region"]
+    assert ctx.sql("SELECT count(*) AS n FROM region").first().n == n
