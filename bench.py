@@ -285,10 +285,35 @@ def _host_delta(a: dict, b: dict) -> dict:
     return out
 
 
+def open_session(app_name: str, sf_dir: str, extra_conf: dict | None = None):
+    """The one fresh-session harness of bench and ``tools/``: a
+    ``get_spark`` session with its one-time costs paid outside any timed
+    region.  A first job warms the session; a mapInPandas no-op starts
+    the Python worker pool and Arrow channels (otherwise the first
+    pandas-path query pays ~3 s of cluster-init, which is not query
+    cost); and the persistent MinHash signature store is staged, since
+    incremental_minhash_scale probes a durable store a production
+    deployment builds once, not per batch (the stage call is idempotent:
+    later sessions see its _SUCCESS marker and skip)."""
+    from spark_monotasks_spark.queries.pipeline_queries import stage_minhash_store
+    from spark_monotasks_spark.session import get_spark
+
+    spark = get_spark(app_name=app_name, extra_conf=extra_conf)
+    spark.range(1000000).selectExpr("sum(id)").collect()
+    spark.range(1000).mapInPandas(lambda it: it, "id long").count()
+    stage_minhash_store(spark, sf_dir)
+    return spark
+
+
 def run_pass(
-    sf_dir: str, rep: int, names: list[str] | None = None, warm: bool = False
+    sf_dir: str,
+    rep: int,
+    names: list[str] | None = None,
+    warm: bool = False,
+    extra_conf: dict | None = None,
 ) -> dict[str, float]:
-    """One full pass over HEADLINE (or a subset) in a fresh SparkSession.
+    """One full pass over HEADLINE (or a subset) in a fresh SparkSession
+    (:func:`open_session`, with ``extra_conf`` applied).
 
     ``warm=True`` (r9, verdict ask #7) executes each query TWICE and
     records the SECOND execution: the codegen/JIT/plan-compile cost a
@@ -298,23 +323,8 @@ def run_pass(
     the warm column is additive evidence only.
     """
     from spark_monotasks_spark.queries import QUERY_REGISTRY
-    from spark_monotasks_spark.session import get_spark
 
-    spark = get_spark(app_name=f"bench-rep{rep}")
-    # warm the session so the first measured query isn't paying init;
-    # the mapInPandas no-op also starts the Python worker pool + Arrow
-    # channels (otherwise the first pandas-path query pays ~3 s of
-    # cluster-init, which is not query cost)
-    spark.range(1000000).selectExpr("sum(id)").collect()
-    spark.range(1000).mapInPandas(lambda it: it, "id long").count()
-    # pre-stage persistent inputs OUTSIDE the timed region (r6 verdict
-    # ask #1): incremental_minhash_scale probes a durable signature
-    # store a production deployment builds once, not per batch — the
-    # stage call is idempotent (first rep builds, later reps and the
-    # per-query call see the _SUCCESS marker and skip)
-    from spark_monotasks_spark.queries.pipeline_queries import stage_minhash_store
-
-    stage_minhash_store(spark, sf_dir)
+    spark = open_session(f"bench-rep{rep}", sf_dir, extra_conf)
 
     timings: dict[str, float] = {}
     for name in (names if names is not None else HEADLINE):

@@ -13,6 +13,9 @@ write path.
 
 from __future__ import annotations
 
+from functools import reduce
+from operator import and_
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -91,6 +94,76 @@ def compaction_bins(
     )
 
 
+def _range_sorted_write(
+    df: DataFrame, path: str, key: str, num_files: int | None,
+    drop_key: bool = False,
+) -> None:
+    """Overwrite ``path`` with ``df`` range-partitioned on ``key`` into
+    ``num_files`` files (default: the session's shuffle partitions) and
+    sorted within each file, so every file owns a disjoint key range."""
+    spark = df.sparkSession
+    if num_files is None:
+        try:
+            num_files = int(spark.conf.get("spark.sql.shuffle.partitions"))
+        except (TypeError, ValueError):
+            num_files = spark.sparkContext.defaultParallelism
+    out = df.repartitionByRange(num_files, F.col(key)).sortWithinPartitions(key)
+    if drop_key:
+        out = out.drop(key)
+    out.write.mode("overwrite").parquet(path)
+
+
+def _write_zone_map(
+    spark, path: str, dims: list[tuple[str, str]], mode: str
+) -> None:
+    """Write the ``<path>__manifest`` zone map: one row per data file
+    with ``<name>_min``/``<name>_max`` of each (column, name) in
+    ``dims`` — one narrow column scan grouped by ``input_file_name``,
+    never the data pass again.  ``overwrite`` maps every file;
+    ``append`` maps only the files the manifest does not list yet
+    (anti-join of two file-count-sized relations)."""
+    files = spark.read.parquet(path).select(
+        F.input_file_name().alias("file"), *[F.col(c) for c, _ in dims]
+    )
+    if mode == "append":
+        known = spark.read.parquet(path + "__manifest").select("file")
+        files = files.join(known, on="file", how="left_anti")
+    aggs = []
+    for c, name in dims:
+        aggs += [F.min(c).alias(f"{name}_min"), F.max(c).alias(f"{name}_max")]
+    files.groupBy("file").agg(*aggs).write.mode(mode).parquet(
+        path + "__manifest"
+    )
+
+
+def _pruned_scan(
+    spark, path: str, box: list[tuple[str, str, object, object]]
+) -> DataFrame:
+    """Scan the zone-mapped table at ``path`` for rows with every
+    (column, name, lo, hi) in ``box`` satisfying ``column BETWEEN lo
+    AND hi``, reading ONLY the files whose manifest ranges overlap the
+    box on every axis.  The manifest collect is file-count-sized (the
+    same listing the parquet reader itself materializes driver-side to
+    plan a scan; at warehouse scale this is exactly Delta/Iceberg's
+    driver-side pruning step, bounded by file count, never rows).  The
+    in-file residual filter still applies (and still pushes down), so
+    the result equals the unpruned scan exactly."""
+    overlap = []
+    for _, name, lo, hi in box:
+        overlap += [
+            F.col(f"{name}_max") >= F.lit(lo), F.col(f"{name}_min") <= F.lit(hi)
+        ]
+    man = spark.read.parquet(path + "__manifest")
+    files = [r.file for r in man.filter(reduce(and_, overlap)).collect()]
+    base = spark.read.parquet(path)
+    if not files:
+        return base.filter(F.lit(False))
+    flt = reduce(
+        and_, [F.col(c).between(F.lit(lo), F.lit(hi)) for c, _, lo, hi in box]
+    )
+    return spark.read.schema(base.schema).parquet(*files).filter(flt)
+
+
 def write_sorted_with_manifest(
     df: DataFrame, path: str, key_col: str, num_files: int | None = None
 ) -> None:
@@ -98,31 +171,9 @@ def write_sorted_with_manifest(
     ``key_col`` (each file owns a disjoint key range) plus a sibling
     ``<path>__manifest`` parquet of per-file (file, key_min, key_max) —
     the file-level zone map every lakehouse format (Delta/Iceberg/Hudi
-    stats) uses to skip files at plan time.  The manifest is built with
-    one narrow column scan of the written files grouped by
-    ``input_file_name`` — never the data pass again."""
-    spark = df.sparkSession
-    if num_files is None:
-        try:
-            num_files = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        except (TypeError, ValueError):
-            num_files = spark.sparkContext.defaultParallelism
-    (
-        df.repartitionByRange(num_files, F.col(key_col))
-        .sortWithinPartitions(key_col)
-        .write.mode("overwrite")
-        .parquet(path)
-    )
-    (
-        spark.read.parquet(path)
-        .select(F.input_file_name().alias("file"), F.col(key_col))
-        .groupBy("file")
-        .agg(
-            F.min(key_col).alias("key_min"), F.max(key_col).alias("key_max")
-        )
-        .write.mode("overwrite")
-        .parquet(path + "__manifest")
-    )
+    stats) uses to skip files at plan time."""
+    _range_sorted_write(df, path, key_col, num_files)
+    _write_zone_map(df.sparkSession, path, [(key_col, "key")], "overwrite")
 
 
 def read_skipping(
@@ -131,27 +182,9 @@ def read_skipping(
     """Scan a :func:`write_sorted_with_manifest` table for
     ``key_col BETWEEN lo AND hi``, reading ONLY the files whose
     manifest [key_min, key_max] range overlaps — file-level data
-    skipping.  The manifest collect is file-count-sized (the same
-    listing the parquet reader itself materializes driver-side to plan
-    a scan; at warehouse scale this is exactly Delta/Iceberg's
-    driver-side pruning step, bounded by file count, never rows).  The
-    in-file residual filter still applies (and still pushes down), so
-    the result equals the unpruned ``BETWEEN`` scan exactly."""
-    man = spark.read.parquet(path + "__manifest")
-    files = [
-        r.file
-        for r in man.filter(
-            (F.col("key_max") >= F.lit(lo)) & (F.col("key_min") <= F.lit(hi))
-        ).collect()
-    ]
-    base = spark.read.parquet(path)
-    if not files:
-        return base.filter(F.lit(False))
-    return (
-        spark.read.schema(base.schema)
-        .parquet(*files)
-        .filter(F.col(key_col).between(F.lit(lo), F.lit(hi)))
-    )
+    skipping; the result equals the unpruned ``BETWEEN`` scan
+    exactly."""
+    return _pruned_scan(spark, path, [(key_col, "key", lo, hi)])
 
 
 def append_with_manifest(df: DataFrame, path: str, key_col: str) -> None:
@@ -160,27 +193,12 @@ def append_with_manifest(df: DataFrame, path: str, key_col: str) -> None:
     ingest-time maintenance step that keeps data skipping usable
     without ever rebuilding stats over history.
 
-    New files are found by anti-joining the table's file listing
-    against the manifest (both file-count-sized relations — no
-    data-sized work); appended files may overlap existing key ranges,
-    which weakens pruning for the touched range but can never change
-    an answer (read_skipping's residual filter still applies).  Run a
-    sorted rewrite (compaction) when overlap accumulates."""
-    spark = df.sparkSession
+    Appended files may overlap existing key ranges, which weakens
+    pruning for the touched range but can never change an answer
+    (read_skipping's residual filter still applies).  Run a sorted
+    rewrite (compaction) when overlap accumulates."""
     df.sortWithinPartitions(key_col).write.mode("append").parquet(path)
-    listing = (
-        spark.read.parquet(path)
-        .select(F.input_file_name().alias("file"), F.col(key_col))
-    )
-    known = spark.read.parquet(path + "__manifest").select("file")
-    new_stats = (
-        listing.join(known, on="file", how="left_anti")
-        .groupBy("file")
-        .agg(
-            F.min(key_col).alias("key_min"), F.max(key_col).alias("key_max")
-        )
-    )
-    new_stats.write.mode("append").parquet(path + "__manifest")
+    _write_zone_map(df.sparkSession, path, [(key_col, "key")], "append")
 
 
 def write_zordered_with_manifest(
@@ -197,35 +215,12 @@ def write_zordered_with_manifest(
     Delta/Iceberg OPTIMIZE ZORDER BY idea.  A 1-D sort clusters one
     dimension perfectly and scatters the other; the Z-curve keeps both
     dimensions locally coherent, so a 2-D box predicate prunes files
-    on both axes.  Same mechanics as :func:`write_sorted_with_manifest`
-    (immutable parquet + sibling manifest built from one narrow scan);
+    on both axes.  Same mechanics as :func:`write_sorted_with_manifest`;
     the manifest rows are (file, x_min, x_max, y_min, y_max)."""
-    spark = df.sparkSession
-    if num_files is None:
-        try:
-            num_files = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        except (TypeError, ValueError):
-            num_files = spark.sparkContext.defaultParallelism
     staged = df.withColumn("_zk", zorder_key(x_col, y_col, bits))
-    (
-        staged.repartitionByRange(num_files, F.col("_zk"))
-        .sortWithinPartitions("_zk")
-        .drop("_zk")
-        .write.mode("overwrite")
-        .parquet(path)
-    )
-    (
-        spark.read.parquet(path)
-        .select(F.input_file_name().alias("file"), F.col(x_col), F.col(y_col))
-        .groupBy("file")
-        .agg(
-            F.min(x_col).alias("x_min"),
-            F.max(x_col).alias("x_max"),
-            F.min(y_col).alias("y_min"),
-            F.max(y_col).alias("y_max"),
-        )
-        .write.mode("overwrite")
-        .parquet(path + "__manifest")
+    _range_sorted_write(staged, path, "_zk", num_files, drop_key=True)
+    _write_zone_map(
+        df.sparkSession, path, [(x_col, "x"), (y_col, "y")], "overwrite"
     )
 
 
@@ -234,26 +229,11 @@ def read_box_skipping(
 ) -> DataFrame:
     """Scan a :func:`write_zordered_with_manifest` table for the 2-D box
     ``x BETWEEN .. AND y BETWEEN ..``, reading only files whose zone
-    maps overlap the box on BOTH axes.  Driver work is file-count-
-    bounded (the lakehouse planner posture, see :func:`read_skipping`);
-    the residual in-file filter still applies and pushes down, so the
+    maps overlap the box on BOTH axes (see :func:`_pruned_scan`); the
     result equals the unpruned box scan exactly."""
-    man = spark.read.parquet(path + "__manifest")
-    files = [
-        r.file
-        for r in man.filter(
-            (F.col("x_max") >= F.lit(x_lo)) & (F.col("x_min") <= F.lit(x_hi))
-            & (F.col("y_max") >= F.lit(y_lo)) & (F.col("y_min") <= F.lit(y_hi))
-        ).collect()
-    ]
-    base = spark.read.parquet(path)
-    flt = (
-        F.col(x_col).between(F.lit(x_lo), F.lit(x_hi))
-        & F.col(y_col).between(F.lit(y_lo), F.lit(y_hi))
+    return _pruned_scan(
+        spark, path, [(x_col, "x", x_lo, x_hi), (y_col, "y", y_lo, y_hi)]
     )
-    if not files:
-        return base.filter(F.lit(False))
-    return spark.read.schema(base.schema).parquet(*files).filter(flt)
 
 
 # ---------------------------------------------------------------------------

@@ -553,14 +553,17 @@ def events_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     t = _t(spark, sf_dir)
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    # NTZ → TIMESTAMP → epoch seconds (identity under the UTC session tz)
-    epoch = F.col("ts").cast("timestamp").cast("long")
-    gap = epoch - F.lag(epoch).over(w)
+    # NTZ → TIMESTAMP → epoch micros (identity under the UTC session tz);
+    # whole seconds would merge a 1800.8 s gap the oracle splits
+    micros = F.unix_micros(F.col("ts").cast("timestamp"))
+    gap = micros - F.lag(micros).over(w)
     marked = t["events"].select(
         "user_id",
         "event_id",
         "ts",
-        F.when(gap.isNull() | (gap > 1800), 1).otherwise(0).alias("new_session"),
+        F.when(gap.isNull() | (gap > 1800 * 10**6), 1)
+        .otherwise(0)
+        .alias("new_session"),
     )
     sess = marked.select(
         "user_id",

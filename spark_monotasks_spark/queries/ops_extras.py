@@ -95,12 +95,12 @@ def session_concurrency_peak(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     t = _t(spark, sf_dir)
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    epoch = F.col("ts").cast("timestamp").cast("long")
-    gap = epoch - F.lag(epoch).over(w)
+    micros = F.unix_micros(F.col("ts").cast("timestamp"))
+    gap = micros - F.lag(micros).over(w)
     sess = t["events"].select(
         "user_id",
         "ts",
-        F.sum(F.when(gap.isNull() | (gap > 1800), 1).otherwise(0))
+        F.sum(F.when(gap.isNull() | (gap > 1800 * 10**6), 1).otherwise(0))
         .over(w)
         .alias("session_no"),
     )

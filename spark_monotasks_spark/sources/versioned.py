@@ -8,10 +8,12 @@ unanswerable.  The standard fix (Delta/Iceberg's core idea) is tiny:
 data files are immutable, and a VERSION is a manifest listing exactly
 the directories that belong to it.  Readers resolve a manifest first,
 so they see a consistent snapshot no matter what a writer is doing;
-the manifest rename is the single atomic commit point; old versions
+the manifest commit is the single atomic commit point; old versions
 stay readable (time travel) until vacuumed.
 
-Layout::
+One commit protocol (``_commit``) serves two manifest layouts:
+
+- a single table, one manifest per version listing its directories::
 
     table/
       data/v1-3f2a9c1d/part-*.parquet   (immutable once committed)
@@ -19,32 +21,49 @@ Layout::
       _versions/v1.json   {"version":1,"dirs":["data/v1-3f2a9c1d"],...}
       _versions/v2.json   {"version":2,"dirs":["data/v1-...","data/v2-..."]}
 
+- a multi-table store, one transaction manifest per snapshot listing
+  every table's directories (``snapshot_*`` functions)::
+
+    base/
+      a/data/t1-0c9e4b7f/part-*.parquet
+      b/data/t1-91d2aa30/part-*.parquet
+      _txns/t1.json   {"txn":1,"tables":{"a":["a/data/t1-..."],"b":[...]}}
+
+The protocol: stage every new data directory under a per-attempt
+random suffix, carry the replay watermark forward, write the manifest
+to a temp file, and hard-link it to its final name.  The hard link is
+atomic AND exclusive (a rename would silently overwrite a concurrent
+committer's manifest), so the loser of a same-id race gets
+:class:`ConcurrentCommitError` and its retry re-resolves the head —
+optimistic concurrency without a lock service.
+
 Scale notes: the manifest holds directory names, not file lists — the
 per-version metadata is O(commits), and Spark's parquet reader lists
 splits inside each directory in parallel.  A crashed writer leaves an
-orphan ``data/`` directory but NO manifest, so it is invisible to every
-reader (write data first, fsync-rename the manifest last).  Data
-directories carry a per-attempt random suffix, so a retry after a
-mid-write crash stages into a FRESH directory instead of colliding
-with the orphan — the sink self-recovers with no manual cleanup, and
-``vacuum`` reaps manifest-less orphans as a side effect (don't run
-vacuum concurrently with an in-flight writer: it cannot tell an orphan
-from a not-yet-committed staging dir).  Readers of version N never
-list directories created after N, so concurrent append+read needs no
-locking.
+orphan data directory but NO manifest, so it is invisible to every
+reader.  The random suffix means a retry after a mid-write crash stages
+into a FRESH directory instead of colliding with the orphan — the sink
+self-recovers with no manual cleanup, and vacuum reaps manifest-less
+orphans as a side effect (don't run vacuum concurrently with an
+in-flight writer: it cannot tell an orphan from a not-yet-committed
+staging dir).  Readers of version N never list directories created
+after N, so concurrent append+read needs no locking.
 
 The streaming replay watermark (``max_batch_id``) is carried forward
 into EVERY manifest — append, overwrite, and compact alike — so
-``vacuum`` dropping old manifests can never regress it and re-admit a
+vacuum dropping old manifests can never regress it and re-admit a
 replayed micro-batch (see streaming.dstream.versioned_append_sink).
 """
 
 from __future__ import annotations
 
+import itertools
 import json
 import os
+import shutil
 import tempfile
 import uuid
+from typing import Callable, Iterable, NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -55,19 +74,41 @@ class ConcurrentCommitError(RuntimeError):
     re-resolves the head and stages into a fresh data directory)."""
 
 
-def _versions_dir(path: str) -> str:
-    return os.path.join(path, "_versions")
+class _Layout(NamedTuple):
+    subdir: str  # manifest directory under the table/store root
+    prefix: str  # manifest file name prefix: <prefix><id>.json
+    id_key: str  # manifest key holding the id
+    noun: str  # what an id is called in messages
+    dirs: Callable[[dict], Iterable[str]]  # a manifest's data directories
+    # the parents of all data directories, given every manifest
+    data_roots: Callable[[list[dict]], list[str]]
 
 
-def list_versions(path: str) -> list[int]:
-    """Committed versions, ascending (a version exists iff its manifest
-    does — data dirs without a manifest are invisible orphans)."""
-    vdir = _versions_dir(path)
-    if not os.path.isdir(vdir):
+_TABLE = _Layout(
+    "_versions", "v", "version", "version",
+    lambda m: m["dirs"],
+    lambda manifests: ["data"],
+)
+_STORE = _Layout(
+    "_txns", "t", "txn", "snapshot",
+    lambda m: itertools.chain.from_iterable(m["tables"].values()),
+    lambda manifests: [
+        f"{t}/data" for t in sorted({t for m in manifests for t in m["tables"]})
+    ],
+)
+
+
+def _manifest_path(root: str, lay: _Layout, n: int) -> str:
+    return os.path.join(root, lay.subdir, f"{lay.prefix}{n}.json")
+
+
+def _list_ids(root: str, lay: _Layout) -> list[int]:
+    mdir = os.path.join(root, lay.subdir)
+    if not os.path.isdir(mdir):
         return []
     out = []
-    for f in os.listdir(vdir):
-        if f.startswith("v") and f.endswith(".json"):
+    for f in os.listdir(mdir):
+        if f.startswith(lay.prefix) and f.endswith(".json"):
             try:
                 out.append(int(f[1:-5]))
             except ValueError:
@@ -75,9 +116,104 @@ def list_versions(path: str) -> list[int]:
     return sorted(out)
 
 
-def _read_manifest(path: str, version: int) -> dict:
-    with open(os.path.join(_versions_dir(path), f"v{version}.json")) as f:
+def _load(root: str, lay: _Layout, n: int) -> dict:
+    with open(_manifest_path(root, lay, n)) as f:
         return json.load(f)
+
+
+def _resolve(
+    root: str, lay: _Layout, ids: list[int], n: int | None = None
+) -> dict:
+    """The manifest of committed id ``n`` (the head if None)."""
+    if not ids:
+        raise ValueError(f"no committed {lay.noun}s at {root!r}")
+    n = ids[-1] if n is None else n
+    if n not in ids:
+        raise ValueError(f"{lay.noun} {n} not in committed {lay.noun}s {ids}")
+    return _load(root, lay, n)
+
+
+def _watermark(m: dict) -> int:
+    return m.get("max_batch_id", m.get("batch_id", -1))
+
+
+def _commit(
+    root: str,
+    lay: _Layout,
+    n: int,
+    prev: dict | None,
+    staged: dict[str, DataFrame],
+    body: dict,
+    batch_id: int | None,
+) -> int:
+    """Stage ``staged`` (relative dir -> rows), then commit manifest
+    ``n`` = {id, **body, batch_id?, max_batch_id?} by exclusive
+    hard-link.  A writer that dies before the link leaves no manifest,
+    so readers never see partial data."""
+    for rel, df in staged.items():
+        df.write.mode("errorifexists").parquet(os.path.join(root, rel))
+    manifest = {lay.id_key: n, **body}
+    carried = -1 if prev is None else _watermark(prev)
+    if batch_id is not None:
+        manifest["batch_id"] = batch_id
+        carried = max(carried, batch_id)
+    if carried >= 0:
+        manifest["max_batch_id"] = carried
+    mdir = os.path.join(root, lay.subdir)
+    os.makedirs(mdir, exist_ok=True)
+    fd, tmp = tempfile.mkstemp(dir=mdir, suffix=".tmp")
+    with os.fdopen(fd, "w") as f:
+        json.dump(manifest, f)
+    try:
+        os.link(tmp, _manifest_path(root, lay, n))
+    except FileExistsError:
+        raise ConcurrentCommitError(
+            f"{lay.noun} {n} at {root!r} was committed by a concurrent "
+            "writer; retry against the new head"
+        ) from None
+    finally:
+        os.unlink(tmp)
+    return n
+
+
+def _vacuum(root: str, lay: _Layout, keep: int) -> list[str]:
+    """Reap every data directory the newest ``keep`` manifests do not
+    reference, then drop the older manifests."""
+    if keep < 1:
+        raise ValueError(f"keep_{lay.noun}s must be >= 1")
+    ids = _list_ids(root, lay)
+    manifests = [_load(root, lay, n) for n in ids]
+    live = {d for m in manifests[-keep:] for d in lay.dirs(m)}
+    removed = []
+    for data_root in lay.data_roots(manifests):
+        full = os.path.join(root, data_root)
+        for d in sorted(os.listdir(full)) if os.path.isdir(full) else []:
+            rel = f"{data_root}/{d}"
+            if rel not in live:
+                shutil.rmtree(os.path.join(full, d), ignore_errors=True)
+                removed.append(rel)
+    for n in ids[:-keep]:
+        os.remove(_manifest_path(root, lay, n))
+    return removed
+
+
+def _check_mode(mode: str) -> None:
+    if mode not in ("append", "overwrite"):
+        raise ValueError(f"mode must be append|overwrite, got {mode!r}")
+
+
+# ---------------------------------------------------------------------------
+# single-table versions
+# ---------------------------------------------------------------------------
+
+def list_versions(path: str) -> list[int]:
+    """Committed versions, ascending (a version exists iff its manifest
+    does — data dirs without a manifest are invisible orphans)."""
+    return _list_ids(path, _TABLE)
+
+
+def _read_manifest(path: str, version: int) -> dict:
+    return _load(path, _TABLE, version)
 
 
 def write_version(
@@ -90,13 +226,11 @@ def write_version(
     still time-travel to the pre-overwrite data — nothing is deleted).
     Returns the committed version number.
 
-    Commit protocol: write the immutable data directory, then create
-    the manifest via atomic rename — a writer that dies mid-way leaves
-    no manifest, so readers never see partial data.  The data directory
-    name carries a random per-attempt suffix and the manifest records
-    the ACTUAL name, so a retry after a mid-write crash never collides
-    with the orphan (``errorifexists`` would otherwise fail every retry
-    forever); the orphan stays invisible and is reaped by ``vacuum``.
+    The data directory name carries a random per-attempt suffix and the
+    manifest records the ACTUAL name, so a retry after a mid-write
+    crash never collides with the orphan (``errorifexists`` would
+    otherwise fail every retry forever).  A lost same-version race
+    raises :class:`ConcurrentCommitError`.
 
     ``batch_id`` stamps the manifest with a streaming micro-batch id —
     ``last_committed_batch_id`` then lets an exactly-once sink skip
@@ -105,46 +239,16 @@ def write_version(
     forward into every manifest (``max_batch_id``) so the watermark
     survives compact + vacuum dropping the stamped manifests.
     """
-    if mode not in ("append", "overwrite"):
-        raise ValueError(f"mode must be append|overwrite, got {mode!r}")
+    _check_mode(mode)
     versions = list_versions(path)
     prev = _read_manifest(path, versions[-1]) if versions else None
     new_v = (versions[-1] + 1) if versions else 1
-    rel_dir = f"data/v{new_v}-{uuid.uuid4().hex[:8]}"
-    df.write.mode("errorifexists").parquet(os.path.join(path, rel_dir))
-    dirs = [rel_dir]
-    if mode == "append" and prev is not None:
-        dirs = prev["dirs"] + dirs
-    manifest = {"version": new_v, "mode": mode, "dirs": dirs}
-    carried = -1
-    if prev is not None:
-        carried = prev.get("max_batch_id", prev.get("batch_id", -1))
-    if batch_id is not None:
-        manifest["batch_id"] = batch_id
-        carried = max(carried, batch_id)
-    if carried >= 0:
-        manifest["max_batch_id"] = carried
-    vdir = _versions_dir(path)
-    os.makedirs(vdir, exist_ok=True)
-    fd, tmp = tempfile.mkstemp(dir=vdir, suffix=".tmp")
-    with os.fdopen(fd, "w") as f:
-        json.dump(manifest, f)
-    # commit point: hard-link is atomic AND exclusive (rename would
-    # silently overwrite a concurrent committer's manifest) — the loser
-    # of a same-version race fails here, its data dir becomes an
-    # invisible orphan for vacuum, and its retry targets the next
-    # version number.  Optimistic concurrency without a lock service.
-    final = os.path.join(vdir, f"v{new_v}.json")
-    try:
-        os.link(tmp, final)
-    except FileExistsError:
-        os.unlink(tmp)
-        raise ConcurrentCommitError(
-            f"version {new_v} at {path!r} was committed by a concurrent "
-            "writer; re-run write_version to retry against the new head"
-        ) from None
-    os.unlink(tmp)
-    return new_v
+    rel = f"data/v{new_v}-{uuid.uuid4().hex[:8]}"
+    dirs = prev["dirs"] + [rel] if mode == "append" and prev else [rel]
+    return _commit(
+        path, _TABLE, new_v, prev, {rel: df},
+        {"mode": mode, "dirs": dirs}, batch_id,
+    )
 
 
 def last_committed_batch_id(path: str) -> int:
@@ -153,13 +257,10 @@ def last_committed_batch_id(path: str) -> int:
     (falling back to per-commit ``batch_id`` for manifests written
     before the carry-forward existed), scanning all surviving manifests
     so the answer is right even with a mixed-era history."""
-    best = -1
-    for v in list_versions(path):
-        m = _read_manifest(path, v)
-        b = m.get("max_batch_id", m.get("batch_id"))
-        if b is not None and b > best:
-            best = b
-    return best
+    return max(
+        [_watermark(_read_manifest(path, v)) for v in list_versions(path)],
+        default=-1,
+    )
 
 
 def read_version(
@@ -168,14 +269,8 @@ def read_version(
     """Snapshot read: resolve the manifest (latest if ``version`` is
     None), scan exactly its directories.  Time travel = pass an older
     version number."""
-    versions = list_versions(path)
-    if not versions:
-        raise ValueError(f"no committed versions at {path!r}")
-    v = versions[-1] if version is None else version
-    if v not in versions:
-        raise ValueError(f"version {v} not in committed versions {versions}")
-    dirs = [os.path.join(path, d) for d in _read_manifest(path, v)["dirs"]]
-    return spark.read.parquet(*dirs)
+    m = _resolve(path, _TABLE, list_versions(path), version)
+    return spark.read.parquet(*[os.path.join(path, d) for d in m["dirs"]])
 
 
 def read_changes(
@@ -193,11 +288,7 @@ def read_changes(
     stream reader observing a truncate+reload.
     """
     versions = list_versions(path)
-    if since_version not in versions:
-        raise ValueError(
-            f"since_version {since_version} not in committed {versions}"
-        )
-    seen = set(_read_manifest(path, since_version)["dirs"])
+    seen = set(_resolve(path, _TABLE, versions, since_version)["dirs"])
     new_dirs: list[str] = []
     for v in versions:
         if v <= since_version:
@@ -220,26 +311,7 @@ def vacuum(path: str, keep_versions: int = 1) -> list[str]:
     The streaming replay watermark survives: every kept manifest
     carries ``max_batch_id`` forward.  Returns the deleted directory
     names."""
-    import shutil
-
-    if keep_versions < 1:
-        raise ValueError("keep_versions must be >= 1")
-    versions = list_versions(path)
-    kept = versions[-keep_versions:]
-    live: set[str] = set()
-    for v in kept:
-        live.update(_read_manifest(path, v)["dirs"])
-    removed = []
-    data_root = os.path.join(path, "data")
-    for d in sorted(os.listdir(data_root)) if os.path.isdir(data_root) else []:
-        rel = f"data/{d}"
-        if rel not in live:
-            shutil.rmtree(os.path.join(data_root, d), ignore_errors=True)
-            removed.append(rel)
-    for v in versions:
-        if v not in kept:
-            os.remove(os.path.join(_versions_dir(path), f"v{v}.json"))
-    return removed
+    return _vacuum(path, _TABLE, keep_versions)
 
 
 def compact(
@@ -260,27 +332,12 @@ def compact(
 # multi-table atomic snapshots (cross-table transactions)
 # ---------------------------------------------------------------------------
 
-def _txns_dir(base: str) -> str:
-    return os.path.join(base, "_txns")
-
-
 def list_snapshots(base: str) -> list[int]:
-    d = _txns_dir(base)
-    if not os.path.isdir(d):
-        return []
-    out = []
-    for f in os.listdir(d):
-        if f.startswith("t") and f.endswith(".json"):
-            try:
-                out.append(int(f[1:-5]))
-            except ValueError:
-                continue
-    return sorted(out)
+    return _list_ids(base, _STORE)
 
 
 def _read_txn(base: str, txn: int) -> dict:
-    with open(os.path.join(_txns_dir(base), f"t{txn}.json")) as f:
-        return json.load(f)
+    return _load(base, _STORE, txn)
 
 
 def snapshot_commit(
@@ -296,18 +353,14 @@ def snapshot_commit(
     so cross-table invariants (a fact and its rollup, orders and their
     lineitems) can never be observed half-updated.
 
-    Protocol = the write_version idea lifted one level: each table's
-    data stages into an immutable uniquely-suffixed directory, and the
-    ONE transaction manifest (``_txns/tN.json``, committed by atomic
-    exclusive hard-link) records every table's directory list.  A
-    writer that dies after staging some tables leaves orphan
-    directories but NO manifest — readers never see a torn snapshot —
-    and the retry stages fresh directories.  Concurrent committers race
-    on the hard link; the loser gets ConcurrentCommitError and retries
-    against the new head.  ``append`` carries each table's previous
-    directory list forward; ``overwrite`` replaces it.  Tables absent
-    from ``dfs`` carry forward unchanged — a transaction may touch any
-    subset.
+    Same commit protocol as write_version, one level up: each table's
+    data stages into its own directory, and the ONE transaction
+    manifest records every table's directory list.  A writer that dies
+    after staging some tables leaves orphan directories but NO
+    manifest — readers never see a torn snapshot.  ``append`` carries
+    each table's previous directory list forward; ``overwrite``
+    replaces it.  Tables absent from ``dfs`` carry forward unchanged —
+    a transaction may touch any subset.
 
     ``batch_id`` stamps the manifest with a streaming micro-batch id;
     the running max carries forward into every manifest
@@ -319,46 +372,25 @@ def snapshot_commit(
     Scale: the manifest is O(tables x commits) directory NAMES; data
     files are immutable parquet written fully distributed.  Returns
     the committed snapshot id."""
-    if mode not in ("append", "overwrite"):
-        raise ValueError(f"mode must be append|overwrite, got {mode!r}")
+    _check_mode(mode)
     if not dfs:
         raise ValueError("snapshot_commit needs at least one table")
     snaps = list_snapshots(base)
     prev = _read_txn(base, snaps[-1]) if snaps else None
     new_t = (snaps[-1] + 1) if snaps else 1
     tables: dict[str, list[str]] = dict(prev["tables"]) if prev else {}
+    staged = {}
     for name, df in dfs.items():
         rel = f"{name}/data/t{new_t}-{uuid.uuid4().hex[:8]}"
-        df.write.mode("errorifexists").parquet(os.path.join(base, rel))
+        staged[rel] = df
         if mode == "append" and name in tables:
             tables[name] = tables[name] + [rel]
         else:
             tables[name] = [rel]
-    manifest = {"txn": new_t, "mode": mode, "tables": tables}
-    carried = -1
-    if prev is not None:
-        carried = prev.get("max_batch_id", prev.get("batch_id", -1))
-    if batch_id is not None:
-        manifest["batch_id"] = batch_id
-        carried = max(carried, batch_id)
-    if carried >= 0:
-        manifest["max_batch_id"] = carried
-    tdir = _txns_dir(base)
-    os.makedirs(tdir, exist_ok=True)
-    fd, tmp = tempfile.mkstemp(dir=tdir, suffix=".tmp")
-    with os.fdopen(fd, "w") as f:
-        json.dump(manifest, f)
-    final = os.path.join(tdir, f"t{new_t}.json")
-    try:
-        os.link(tmp, final)
-    except FileExistsError:
-        os.unlink(tmp)
-        raise ConcurrentCommitError(
-            f"snapshot {new_t} at {base!r} was committed by a concurrent "
-            "writer; re-run snapshot_commit to retry against the new head"
-        ) from None
-    os.unlink(tmp)
-    return new_t
+    return _commit(
+        base, _STORE, new_t, prev, staged,
+        {"mode": mode, "tables": tables}, batch_id,
+    )
 
 
 def last_snapshot_batch_id(base: str) -> int:
@@ -366,10 +398,7 @@ def last_snapshot_batch_id(base: str) -> int:
     committed snapshot carries (-1 if none) — resolved from the LATEST
     manifest only, since the running max is carried forward."""
     snaps = list_snapshots(base)
-    if not snaps:
-        return -1
-    m = _read_txn(base, snaps[-1])
-    return m.get("max_batch_id", m.get("batch_id", -1))
+    return _watermark(_read_txn(base, snaps[-1])) if snaps else -1
 
 
 def snapshot_read(
@@ -378,15 +407,9 @@ def snapshot_read(
     """Read ``table`` AS OF snapshot ``txn`` (default: latest).  Two
     reads at the same ``txn`` — of different tables — are guaranteed
     mutually consistent: both resolve the one transaction manifest."""
-    snaps = list_snapshots(base)
-    if not snaps:
-        raise ValueError(f"no snapshots at {base!r}")
-    t = snaps[-1] if txn is None else txn
-    if t not in snaps:
-        raise ValueError(f"snapshot {t} not in {snaps}")
-    m = _read_txn(base, t)
+    m = _resolve(base, _STORE, list_snapshots(base), txn)
     if table not in m["tables"]:
-        raise ValueError(f"table {table!r} not in snapshot {t}")
+        raise ValueError(f"table {table!r} not in snapshot {m['txn']}")
     dirs = [os.path.join(base, d) for d in m["tables"][table]]
     return spark.read.parquet(*dirs)
 
@@ -402,13 +425,10 @@ def snapshot_changes(
     an overwrite between the txns makes the delta undefined (the new
     dirs are a full replacement, not an increment) and raises."""
     snaps = list_snapshots(base)
-    if from_txn not in snaps or to_txn not in snaps:
-        raise ValueError(f"txns must be in {snaps}")
+    older = _resolve(base, _STORE, snaps, from_txn)["tables"].get(table, [])
+    newer = _resolve(base, _STORE, snaps, to_txn)["tables"].get(table, [])
     if from_txn >= to_txn:
         raise ValueError("from_txn must precede to_txn")
-    older = _read_txn(base, from_txn)["tables"].get(table, [])
-    m_new = _read_txn(base, to_txn)
-    newer = m_new["tables"].get(table, [])
     if not set(older) <= set(newer):
         raise ValueError(
             f"table {table!r} was overwritten between txn {from_txn} and "
@@ -429,33 +449,7 @@ def snapshot_vacuum(base: str, keep_snapshots: int = 1) -> list[str]:
     Orphans from crashed writers go too.  Returns removed relative
     directory names.  Same caveat as table-level vacuum: don't run
     concurrently with an in-flight committer."""
-    import shutil
-
-    if keep_snapshots < 1:
-        raise ValueError("keep_snapshots must be >= 1")
-    snaps = list_snapshots(base)
-    kept = snaps[-keep_snapshots:]
-    live: set[str] = set()
-    tables: set[str] = set()
-    for t in snaps:
-        tables.update(_read_txn(base, t)["tables"])
-    for t in kept:
-        for dirs in _read_txn(base, t)["tables"].values():
-            live.update(dirs)
-    removed = []
-    for tbl in sorted(tables):
-        data_root = os.path.join(base, tbl, "data")
-        if not os.path.isdir(data_root):
-            continue
-        for d in sorted(os.listdir(data_root)):
-            rel = f"{tbl}/data/{d}"
-            if rel not in live:
-                shutil.rmtree(os.path.join(data_root, d), ignore_errors=True)
-                removed.append(rel)
-    for t in snaps:
-        if t not in kept:
-            os.remove(os.path.join(_txns_dir(base), f"t{t}.json"))
-    return removed
+    return _vacuum(base, _STORE, keep_snapshots)
 
 
 def snapshot_compact(
@@ -469,31 +463,6 @@ def snapshot_compact(
     time-travelable until snapshot_vacuum; readers see the old dirs or
     the new one, never a mix (txn-manifest atomicity)."""
     latest = snapshot_read(spark, base, table)
-    snaps = list_snapshots(base)
-    prev = _read_txn(base, snaps[-1])
-    new_t = snaps[-1] + 1
-    rel = f"{table}/data/t{new_t}-{uuid.uuid4().hex[:8]}"
-    latest.repartition(target_partitions).write.mode("errorifexists").parquet(
-        os.path.join(base, rel)
+    return snapshot_commit(
+        {table: latest.repartition(target_partitions)}, base, mode="overwrite"
     )
-    tables = dict(prev["tables"])
-    tables[table] = [rel]
-    manifest = {"txn": new_t, "mode": "overwrite", "tables": tables}
-    carried = prev.get("max_batch_id", prev.get("batch_id", -1))
-    if carried >= 0:
-        manifest["max_batch_id"] = carried
-    tdir = _txns_dir(base)
-    fd, tmp = tempfile.mkstemp(dir=tdir, suffix=".tmp")
-    with os.fdopen(fd, "w") as f:
-        json.dump(manifest, f)
-    final = os.path.join(tdir, f"t{new_t}.json")
-    try:
-        os.link(tmp, final)
-    except FileExistsError:
-        os.unlink(tmp)
-        raise ConcurrentCommitError(
-            f"snapshot {new_t} at {base!r} was committed by a concurrent "
-            "writer; re-run snapshot_compact against the new head"
-        ) from None
-    os.unlink(tmp)
-    return new_t

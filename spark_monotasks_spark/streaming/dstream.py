@@ -23,6 +23,7 @@ kills a streaming job.
 
 from __future__ import annotations
 
+import functools
 from typing import Any, Callable, Iterable, Sequence
 
 import pandas as pd
@@ -571,6 +572,54 @@ def streaming_upsert_sink(
     )
 
 
+def _dedup_ingest_sink(
+    stream: DataFrame,
+    survivors_path: str,
+    store_path: str,
+    checkpoint: str,
+    dedup: Callable[[DataFrame, DataFrame | None], tuple[DataFrame, DataFrame]],
+) -> DataStreamWriter:
+    """The exactly-once ingest loop shared by the exact and near-dup
+    sinks: ``dedup(batch, store)`` scores each micro-batch against the
+    store rows of EARLIER batches and returns ``(survivors, delta)``;
+    survivors commit once per ``batch_id`` through the versioned
+    manifest, and the batch-stamped delta appends to the store unless a
+    replay already wrote it."""
+    import os
+
+    from spark_monotasks_spark.sources import versioned as V
+
+    def apply_batch(batch: DataFrame, batch_id: int) -> None:
+        spark = batch.sparkSession
+        store = None
+        have_store = os.path.exists(store_path)
+        if have_store:
+            store = spark.read.parquet(store_path).filter(
+                F.col("batch_id") < batch_id
+            )
+        survivors, delta = dedup(batch, store)
+        if batch_id > V.last_committed_batch_id(survivors_path):
+            V.write_version(
+                survivors, survivors_path, mode="append", batch_id=batch_id
+            )
+        if have_store:
+            replayed = (
+                spark.read.parquet(store_path)
+                .filter(F.col("batch_id") == batch_id)
+                .limit(1)
+                .count()
+            )
+            if replayed:
+                return
+        delta.withColumn("batch_id", F.lit(batch_id)).write.mode(
+            "append"
+        ).parquet(store_path)
+
+    return stream.writeStream.foreachBatch(apply_batch).option(
+        "checkpointLocation", checkpoint
+    )
+
+
 def streaming_dedup_ingest_sink(
     stream: DataFrame,
     survivors_path: str,
@@ -607,41 +656,13 @@ def streaming_dedup_ingest_sink(
     first-arriving batch wins a fingerprint, min-``id_col`` within a
     batch — identical to running the batch operator sequentially
     (asserted batch-vs-stream in tests/test_streaming.py)."""
-    import os
-
     from spark_monotasks_spark.pipeline.dedup import incremental_exact_dedup
-    from spark_monotasks_spark.sources import versioned as V
 
-    def apply_batch(batch: DataFrame, batch_id: int) -> None:
-        spark = batch.sparkSession
-        store = None
-        have_store = os.path.exists(store_path)
-        if have_store:
-            store = spark.read.parquet(store_path).filter(
-                F.col("batch_id") < batch_id
-            )
-        survivors, delta = incremental_exact_dedup(
-            batch, store, id_col=id_col, text_col=text_col
-        )
-        if batch_id > V.last_committed_batch_id(survivors_path):
-            V.write_version(
-                survivors, survivors_path, mode="append", batch_id=batch_id
-            )
-        if have_store:
-            replayed = (
-                spark.read.parquet(store_path)
-                .filter(F.col("batch_id") == batch_id)
-                .limit(1)
-                .count()
-            )
-            if replayed:
-                return
-        delta.withColumn("batch_id", F.lit(batch_id)).write.mode(
-            "append"
-        ).parquet(store_path)
-
-    return stream.writeStream.foreachBatch(apply_batch).option(
-        "checkpointLocation", checkpoint
+    return _dedup_ingest_sink(
+        stream, survivors_path, store_path, checkpoint,
+        functools.partial(
+            incremental_exact_dedup, id_col=id_col, text_col=text_col
+        ),
     )
 
 
@@ -670,48 +691,19 @@ def streaming_neardup_ingest_sink(
     Scale shape is the batch operator's (melted keys + ids only in the
     store join; star-CC on candidate pairs); persist the store
     bucketed by ``(fam, h)`` to skip the history shuffle."""
-    import os
-
     from spark_monotasks_spark.pipeline.dedup import incremental_minhash_dedup
-    from spark_monotasks_spark.sources import versioned as V
 
-    def apply_batch(batch: DataFrame, batch_id: int) -> None:
-        spark = batch.sparkSession
-        store = None
-        have_store = os.path.exists(store_path)
-        if have_store:
-            store = spark.read.parquet(store_path).filter(
-                F.col("batch_id") < batch_id
-            )
-        survivors, delta = incremental_minhash_dedup(
-            batch,
-            store,
+    return _dedup_ingest_sink(
+        stream, survivors_path, store_path, checkpoint,
+        functools.partial(
+            incremental_minhash_dedup,
             id_col=id_col,
             text_col=text_col,
             shingle_k=shingle_k,
             num_hashes=num_hashes,
             min_matches=min_matches,
             family=family,
-        )
-        if batch_id > V.last_committed_batch_id(survivors_path):
-            V.write_version(
-                survivors, survivors_path, mode="append", batch_id=batch_id
-            )
-        if have_store:
-            replayed = (
-                spark.read.parquet(store_path)
-                .filter(F.col("batch_id") == batch_id)
-                .limit(1)
-                .count()
-            )
-            if replayed:
-                return
-        delta.withColumn("batch_id", F.lit(batch_id)).write.mode(
-            "append"
-        ).parquet(store_path)
-
-    return stream.writeStream.foreachBatch(apply_batch).option(
-        "checkpointLocation", checkpoint
+        ),
     )
 
 

@@ -85,6 +85,26 @@ def test_snapshot_concurrent_commit_loses_cleanly(spark, tmp_path):
     assert V.snapshot_commit({"a": df}, base) == 3
 
 
+def test_snapshot_compact_concurrent_commit_loses_cleanly(spark, tmp_path):
+    """Compaction commits through the same exclusive hard-link: a
+    compact that resolved a stale head loses to the concurrent winner
+    with ConcurrentCommitError, and the winner's snapshot is intact."""
+    base = str(tmp_path / "cmp_race")
+    mk = lambda rows: spark.createDataFrame(rows, "k string, n long")
+    V.snapshot_commit({"a": mk([("x", 1)])}, base)
+    V.snapshot_commit({"a": mk([("y", 2)])}, base)  # the winner's t2
+    real = V.list_snapshots
+    V.list_snapshots = lambda b: [1]
+    try:
+        with pytest.raises(V.ConcurrentCommitError):
+            V.snapshot_compact(spark, base, "a", target_partitions=1)
+    finally:
+        V.list_snapshots = real
+    assert V.list_snapshots(base) == [1, 2]
+    assert len(V._read_txn(base, 2)["tables"]["a"]) == 2
+    assert _counts(spark, base, "a") == {"x": 1, "y": 2}
+
+
 def test_snapshot_overwrite_mode(spark, tmp_path):
     base = str(tmp_path / "ow")
     df1 = spark.createDataFrame([("x", 1)], "k string, n long")

@@ -173,3 +173,51 @@ def test_decimal38_overflow_delta(spark):
         F.sum("v").alias("s")
     ).first().s
     assert ok == big * 9
+
+
+def test_session_gap_compared_exactly(spark, tmp_path):
+    """A 1800.8 s gap exceeds the 30-minute session timeout: user 1's
+    two events are two sessions in the builders as in their oracles
+    (a gap cut to whole seconds would keep one session), so user 2's
+    lone event at 00:15 overlaps no session of user 1 and the daily
+    concurrency peak is 1."""
+    import datetime as dt
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from spark_monotasks_spark.queries import ORACLE_REGISTRY, QUERY_REGISTRY
+
+    from tests.conftest import SF_TEST_DIR
+
+    schema = pq.read_schema(
+        os.path.join(SF_TEST_DIR, "events.parquet")
+    ).remove_metadata()
+    day = dt.datetime(2024, 1, 1)
+    rows = [  # (event_id, ts, user_id)
+        (0, day + dt.timedelta(milliseconds=100), 1),
+        (1, day + dt.timedelta(minutes=15), 2),
+        (2, day + dt.timedelta(minutes=30, milliseconds=900), 1),
+    ]
+    cols = {
+        "event_id": [r[0] for r in rows],
+        "ts": [r[1] for r in rows],
+        "user_id": [r[2] for r in rows],
+        "event_type": ["view"] * 3,
+        "value": [1.0] * 3,
+        "props": ['{"k": 1}'] * 3,
+    }
+    pq.write_table(
+        pa.table({f.name: cols[f.name] for f in schema}, schema=schema),
+        str(tmp_path / "events.parquet"),
+    )
+    con = _duck(str(tmp_path))
+    expect_rows = {"events_sessionize": 3, "session_concurrency_peak": 1}
+    for name, n_rows in expect_rows.items():
+        sdf = QUERY_REGISTRY[name](spark, str(tmp_path))
+        got = _normalize([tuple(r) for r in sdf.collect()], sdf.columns)
+        want = _normalize(con.execute(ORACLE_REGISTRY[name]).fetchall(), None)
+        assert got == want, f"{name}: spark={got} duck={want}"
+        assert len(got) == n_rows, name
+    peak = QUERY_REGISTRY["session_concurrency_peak"](spark, str(tmp_path))
+    assert [r["peak_active"] for r in peak.collect()] == [1]

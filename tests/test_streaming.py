@@ -752,7 +752,8 @@ def test_streaming_neardup_ingest_matches_sequential_batches(spark, tmp_path):
     """NEAR-dup streaming ingest == the batch operator run
     sequentially per micro-batch: history hits kill whole clusters,
     min-id survives within clean clusters, the melted signature store
-    grows batch-stamped."""
+    grows batch-stamped; a checkpoint restart with no new data changes
+    nothing."""
     import glob as _glob
     import shutil as _shutil
 
@@ -802,6 +803,17 @@ def test_streaming_neardup_ingest_matches_sequential_batches(spark, tmp_path):
     assert {0, 1, 11, 20} <= set(got)
     srows = spark.read.parquet(store)
     assert {r.batch_id for r in srows.collect()} == {0, 1, 2}
+
+    # restart from the same checkpoint with no new files: exactly-once
+    q2 = dstream.streaming_neardup_ingest_sink(
+        dstream.file_stream(spark, str(src), schema),
+        surv_tbl,
+        store,
+        checkpoint=str(tmp_path / "nd_ck"),
+    ).trigger(availableNow=True).start()
+    _await(q2)
+    assert V.read_version(spark, surv_tbl).count() == len(got)
+    assert spark.read.parquet(store).count() == srows.count()
 
 
 def test_streaming_split_router_matches_batch_and_never_leaks(spark, tmp_path):

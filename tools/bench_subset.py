@@ -38,24 +38,11 @@ def main() -> None:
             names.append(a)
             i += 1
 
-    import spark_monotasks_spark.session as S
-
-    if conf:
-        orig = S.get_spark
-
-        def patched(app_name="spark_monotasks_spark", master=None,
-                    shuffle_partitions=None, extra_conf=None):
-            merged = dict(conf)
-            merged.update(extra_conf or {})
-            return orig(app_name, master, shuffle_partitions, merged)
-
-        S.get_spark = patched
-
     import bench
 
     samples: dict[str, list[float]] = {n: [] for n in names}
     for rep in range(reps):
-        t = bench.run_pass(sf, rep, names=names)
+        t = bench.run_pass(sf, rep, names=names, extra_conf=conf)
         for n, v in t.items():
             samples[n].append(v)
     print(f"# conf: {conf}")

@@ -36,18 +36,14 @@ def main() -> None:
             names.append(a)
             i += 1
 
+    from bench import open_session
     from spark_monotasks_spark.queries import QUERY_REGISTRY
-    from spark_monotasks_spark.session import get_spark
 
     here = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     outdir = os.path.join(here, "plans", rnd)
     os.makedirs(outdir, exist_ok=True)
 
-    spark = get_spark(app_name="capture-plans")
-    spark.range(1000).mapInPandas(lambda it: it, "id long").count()
-    from spark_monotasks_spark.queries.pipeline_queries import stage_minhash_store
-
-    stage_minhash_store(spark, sf)
+    spark = open_session("capture-plans", sf)
 
     for name in names:
         fn = QUERY_REGISTRY[name]

@@ -2,8 +2,8 @@
 
 Usage: python tools/trace_query.py NAME [NAME ...] [--sf DIR] [--json PATH]
 
-Builds one session with ``get_spark``, runs a few warm-up jobs (a first
-job, the Python worker pool, the staged MinHash store), then runs every
+Opens one session with ``bench.open_session`` (a first job, the Python
+worker pool, the staged MinHash store), then runs every
 named entry through the ``noop`` sink twice: a cold pass and a warm pass
 over the same entries.  ``perfbench/ledger.py``'s ``Ledger`` reads each
 query's layers from Spark's own bookkeeping: jobs, stages and tasks,
@@ -65,20 +65,16 @@ def main() -> None:
 
     from ledger import Ledger
 
+    from bench import open_session
     from spark_monotasks_spark.queries import QUERY_REGISTRY
-    from spark_monotasks_spark.queries.pipeline_queries import stage_minhash_store
-    from spark_monotasks_spark.session import get_spark
 
     unknown = [n for n in args.names if n not in QUERY_REGISTRY]
     if unknown:
         raise SystemExit(f"unknown catalog entries: {unknown}")
-    spark = get_spark(
-        app_name="trace-query", extra_conf={"spark.ui.showConsoleProgress": "false"}
+    spark = open_session(
+        "trace-query", args.sf, {"spark.ui.showConsoleProgress": "false"}
     )
     sc = spark.sparkContext
-    spark.range(1_000_000).selectExpr("sum(id)").collect()
-    spark.range(1000).mapInPandas(lambda it: it, "id long").count()
-    stage_minhash_store(spark, args.sf)
 
     ledger = Ledger(spark, tables)
     passes = {}
