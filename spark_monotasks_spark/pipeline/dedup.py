@@ -79,7 +79,8 @@ def drop_exact_duplicates(
 def shingles(col: Column | str, k: int = 3, sep: str = " ") -> Column:
     """Token k-shingles as an array<string> (distinct).  For k=1 this is
     the token set.  ``sep`` is treated as a literal separator (escaped
-    before the regex-based split, so '.' or '|' work as given)."""
+    before the regex-based split, so '.' or '|' work as given).  NULL
+    text has NULL shingles at every k; empty text has ``['']``."""
     toks = F.split(col, re.escape(sep))
     if k == 1:
         return F.array_distinct(toks)
@@ -87,7 +88,7 @@ def shingles(col: Column | str, k: int = 3, sep: str = " ") -> Column:
     # than an index lambda doing slice+join per position
     return F.when(
         F.size(toks) >= k, F.array_distinct(_ngram_fold(toks, k, sep))
-    ).otherwise(F.array(F.concat_ws(sep, toks)))
+    ).when(toks.isNotNull(), F.array(F.concat_ws(sep, toks)))
 
 
 def minhash_signatures(
@@ -106,12 +107,14 @@ def minhash_signatures(
     multiply-shift universal family; wrap-around long overflow IS the
     mod-2^64, which is why the catalog pins ansi.enabled=false) —
     whole-stage-compiled end to end.  The map-side partial aggregate
-    collapses each doc to ``num_hashes`` longs before the exchange
-    (~8·num_hashes bytes/doc — trivial beside the corpus scan).  Shapes
-    that measured slower: per-family ``array_min(transform(...))``
-    folds (interpreted per element), (id, shingle, i) explode through
-    TWO groupBys (~3.7 s — num_hashes× row blowup through a shuffle),
-    and ``xxhash64(h0, i)`` inside a nested lambda (~9 s).
+    collapses each doc to ``num_hashes`` longs before the exchange.
+    The ``(a_i, b_i)`` come from ``_REHASH_SEED``, so signatures are the
+    same in every session.
+
+    The aggregate is ONE ``F.expr`` string, ``array(min(...), ...)``:
+    every ``F.*`` call and Column operator costs several Py4J round
+    trips, so building the same expression as ``num_hashes`` Column
+    trees takes over ten times the Py4J calls.
     """
     df = _spread(df)
     sh = shingles(F.col(text_col), k=shingle_k)
@@ -122,23 +125,13 @@ def minhash_signatures(
     ]
     rows = df.select(F.col(id_col).alias("id"), F.explode_outer(sh).alias("_s"))
     # xxhash64 ignores NULL inputs (hashes to the seed) — keep NULL
-    # shingles NULL so empty/NULL docs get [NULL, ...] signatures
+    # shingles NULL so NULL docs get [NULL, ...] signatures
     h0 = F.when(F.col("_s").isNull(), F.lit(None).cast("long")).otherwise(
         F.xxhash64(F.col("_s"))
     )
     hs = rows.select("id", h0.alias("_h"))
-    aggs = [
-        F.min(F.col("_h") * F.lit(a) + F.lit(b)).alias(f"_m{i}")
-        for i, (a, b) in enumerate(ab)
-    ]
-    return (
-        hs.groupBy("id")
-        .agg(*aggs)
-        .select(
-            "id",
-            F.array(*[F.col(f"_m{i}") for i in range(num_hashes)]).alias("sig"),
-        )
-    )
+    mins = ", ".join(f"min(_h * {a}L + {b}L)" for a, b in ab)
+    return hs.groupBy("id").agg(F.expr(f"array({mins})").alias("sig"))
 
 
 def minhash_bands(sig: Column, num_bands: int = 16, rows_per_band: int = 4) -> Column:
@@ -195,20 +188,15 @@ def minhash_near_duplicates(
             "are silently discarded"
         )
     rows_per_band = num_hashes // num_bands
-    # Materialize the signatures before banding: the signature is one
-    # giant narrow expression, and without a pin Catalyst's
-    # projection collapse would substitute it into EVERY band's slice
-    # (bands× the work) and then again into both sides of the
-    # self-join.  The pin stores |docs| rows of id + 64 longs — the
-    # same bytes the pre-rewrite version shuffled anyway.  persist()
-    # on the non-reliable path (r7): the InMemoryRelation is the same
-    # collapse boundary, keeps AQE planning below it, and measured
-    # ~2x cheaper on the FIRST (cold) execution (3.7s vs 6.8s at
-    # sf0.1) — which is what every fresh-session bench rep and every
-    # one-shot production run pays; reliable=True keeps the durable
-    # checkpoint.
+    # Pin the (id, band, bucket) rows, not the signatures: the rows
+    # feed both sides of the self-join, and a pin on the signatures
+    # would still leave each side to build the bands from them.
+    # Pinned here, the bands are computed once, inside the cache
+    # build, and the pin holds three narrow columns instead of a
+    # num_hashes-long array per doc.  persist() keeps AQE planning
+    # below the pin and costs about half a checkpoint on a cold
+    # execution; reliable=True takes a durable checkpoint instead.
     sigs = minhash_signatures(df, id_col, text_col, shingle_k, num_hashes)
-    sigs = barrier(sigs, reliable) if reliable else sigs.persist()
     base = sigs.select(
         "id",
         minhash_bands(F.col("sig"), num_bands, rows_per_band).alias("bands"),
@@ -216,6 +204,7 @@ def minhash_near_duplicates(
     banded = base.select("id", F.explode("bands").alias("bb")).select(
         "id", F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket")
     )
+    banded = barrier(banded, reliable) if reliable else banded.persist()
     a = banded.alias("a")
     b = banded.alias("b")
     cand = (
@@ -229,21 +218,16 @@ def minhash_near_duplicates(
         .dropDuplicates(["id_a", "id_b"])
     )
     # candidate pairs are used twice below (id filter + verification
-    # join); pin so the banding self-join runs exactly once (persist
-    # over checkpoint for the same cold-cost reason as the signature
-    # pin above)
+    # join); pin so the banding self-join runs exactly once
     cand = barrier(cand, reliable) if reliable else cand.persist()
     # shingle sets are computed ONLY for docs that appear in a candidate
     # pair (semi-join prune): at 100 TB the corpus is scanned once with
-    # an id filter instead of shingling every doc.  NO forced broadcast
-    # hint (r8, completing r7 verdict ask #4 via its "drop the hint"
-    # option): healthy banding keeps the candidate-id set tiny and AQE
-    # picks a broadcast semi join from the distinct's REAL runtime
-    # size, while a degenerate corpus (near-identical boilerplate at
-    # scale) exceeds the broadcast threshold and degrades to a shuffle
-    # semi join instead of OOMing the driver.  This also removes the
-    # r7 bounded probe count — one fewer eager job per call, and the
-    # decision moves from a fixed row-count limit to actual bytes.
+    # an id filter instead of shingling every doc.  No broadcast hint:
+    # healthy banding keeps the candidate-id set tiny and AQE picks a
+    # broadcast semi join from the distinct's runtime size, while a
+    # degenerate corpus (near-identical boilerplate at scale) exceeds
+    # the broadcast threshold and degrades to a shuffle semi join
+    # instead of OOMing the driver.
     need = (
         cand.select(F.col("id_a").alias("id"))
         .unionAll(cand.select(F.col("id_b").alias("id")))
@@ -260,12 +244,9 @@ def minhash_near_duplicates(
             shingles(F.col(text_col), k=shingle_k).alias("sh"),
         )
     )
-    # r9: pin the pruned shingle sets — ``shs`` feeds the verify join
-    # TWICE (sh_a and sh_b), and without a pin each side re-ran the
-    # corpus scan + semi prune + shingle build (load-matched A/B: 5/6
-    # rounds faster, ~-9%% median; the two quietest rounds -5%%/-13%%).
-    # At scale this is the difference between shingling the pruned doc
-    # set once and twice.  Same persist discipline as sigs/cand above.
+    # pin the pruned shingle sets: ``shs`` feeds the verify join twice
+    # (sh_a and sh_b), and without a pin each side re-runs the corpus
+    # scan, the semi prune and the shingle build
     shs = shs.persist()
     pairs = cand.join(
         shs.select(F.col("id").alias("id_a"), F.col("sh").alias("sh_a")), on="id_a"
@@ -293,14 +274,17 @@ def simhash_signatures(
     of xxhash64(token) bit patterns (frequency-weighted — repeated
     tokens vote repeatedly).
 
-    ZERO-shuffle shape (same rationale as minhash_signatures): hash the
-    token stream once per doc, then the 64 per-bit majority votes are
-    64 ``size(filter(hashes, h -> h & mask != 0))`` counts with
-    PYTHON-LITERAL masks (no column shifts — higher-order lambdas run
-    interpreted, keep the inner expression to one AND).  vote_i =
-    2*ones_i - n  >  0  ⇔ majority; bit values are disjoint powers of
-    two so their SUM is the bitwise OR (bit 63 via the two's-complement
-    sign value -2^63).  One narrow projection, nothing shuffles."""
+    Zero-shuffle shape: hash the token stream once per doc, then the 64
+    per-bit majority votes are 64 ``size(filter(hashes, h -> h & mask
+    != 0))`` counts with literal masks (no column shifts — higher-order
+    lambdas run interpreted, keep the inner expression to one AND).
+    vote_i = 2*ones_i - n  >  0  ⇔ majority; bit values are disjoint
+    powers of two so their SUM is the bitwise OR (bit 63 via the
+    two's-complement sign value -2^63).  One narrow projection, nothing
+    shuffles.
+
+    The 64 votes are ONE ``F.expr`` string: built as Column trees they
+    cost about 4,000 Py4J calls per build, as a string under 100."""
     if bits != 64:
         raise ValueError(f"only 64-bit signatures are supported, got {bits}")
     df = _spread(df)
@@ -308,18 +292,14 @@ def simhash_signatures(
         F.split(F.col(text_col), " "), lambda t: F.xxhash64(t)
     ).alias("_hs")
     base = df.select(F.col(id_col).alias("id"), hs)
-    n = F.size("_hs")
-
-    def bitval(i: int) -> Column:
-        # two's-complement long for bit 63 (1 << 63 overflows Java long)
-        mask = (1 << i) if i < 63 else -(1 << 63)
-        ones = F.size(F.filter("_hs", lambda h: h.bitwiseAND(mask) != 0))
-        return F.when(ones * 2 > n, F.lit(mask).cast("bigint")).otherwise(
-            F.lit(0).cast("bigint")
-        )
-
-    sig = sum([bitval(i) for i in range(1, 64)], bitval(0)).alias("sig")
-    return base.select("id", sig)
+    # two's-complement long for bit 63 (1 << 63 overflows Java long)
+    masks = [1 << i for i in range(63)] + [-(1 << 63)]
+    votes = " + ".join(
+        f"CASE WHEN size(filter(_hs, h -> (h & {m}L) != 0)) * 2 > size(_hs) "
+        f"THEN CAST({m}L AS BIGINT) ELSE CAST(0 AS BIGINT) END"
+        for m in masks
+    )
+    return base.select("id", F.expr(votes).alias("sig"))
 
 
 def simhash_near_duplicates(
@@ -347,12 +327,11 @@ def simhash_near_duplicates(
             "64-bit mask, non-divisors silently drop the top bits)"
         )
     band_width = 64 // num_bands
-    # pin before banding: without it the 64-filter signature
-    # expression would be substituted into every band chunk and both
-    # self-join sides (see minhash_near_duplicates); id + one bigint
-    # per doc is cheaper than any shuffle of the same rows.  persist
-    # on the non-reliable path (r7 — same cold-cost measurement as the
-    # minhash pin; the InMemoryRelation is the same collapse boundary)
+    # pin before banding: the signature is a projection, and without a
+    # pin Catalyst's projection collapse would substitute the 64-filter
+    # expression into every band chunk and both self-join sides; id +
+    # one bigint per doc is cheaper than any shuffle of the same rows.
+    # persist() for the same cold-cost reason as minhash_near_duplicates
     _sigs = simhash_signatures(df, id_col, text_col)
     base = barrier(_sigs, reliable) if reliable else _sigs.persist()
     banded = base.select(

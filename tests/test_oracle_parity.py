@@ -221,3 +221,35 @@ def test_session_gap_compared_exactly(spark, tmp_path):
         assert len(got) == n_rows, name
     peak = QUERY_REGISTRY["session_concurrency_peak"](spark, str(tmp_path))
     assert [r["peak_active"] for r in peak.collect()] == [1]
+
+
+def test_null_text_has_no_shingles(spark, tmp_path):
+    """NULL text has NULL shingles at every k, as in the oracles: two
+    NULL-text documents and one empty one are no near-duplicates of
+    each other (a NULL doc read as the empty string would pair with
+    every other NULL or empty doc at Jaccard 1.0)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from spark_monotasks_spark.queries import ORACLE_REGISTRY, QUERY_REGISTRY
+
+    from tests.conftest import SF_TEST_DIR
+
+    schema = pq.read_schema(
+        os.path.join(SF_TEST_DIR, "documents.parquet")
+    ).remove_metadata()
+    cols = {
+        "doc_id": [1, 2, 3],
+        "text": [None, None, ""],
+        "lang": ["en"] * 3,
+        "source": ["web"] * 3,
+        "n_chars": [0] * 3,
+    }
+    pq.write_table(
+        pa.table({f.name: cols[f.name] for f in schema}, schema=schema),
+        str(tmp_path / "documents.parquet"),
+    )
+    name = "ngram_jaccard_block"
+    got = [tuple(r) for r in QUERY_REGISTRY[name](spark, str(tmp_path)).collect()]
+    want = _duck(str(tmp_path)).execute(ORACLE_REGISTRY[name]).fetchall()
+    assert got == want == []

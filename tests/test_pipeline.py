@@ -85,6 +85,48 @@ def test_simhash_identical_and_near(spark, docs_with_dups):
     assert found[(0, 3)] == 0
 
 
+def test_signature_values_pinned(spark, docs_with_dups):
+    """MinHash (16 and 64 hashes) and SimHash signature values are a
+    stored format: a near-dup index built with one release must stay
+    joinable with the next one's, so a rewrite of the signature
+    expressions must reproduce these digests exactly."""
+    import hashlib
+
+    def digest(rows):
+        return hashlib.sha256(repr(sorted(rows)).encode()).hexdigest()
+
+    got = {
+        f"minhash{n}": digest(
+            (r.id, list(r.sig))
+            for r in dedup.minhash_signatures(docs_with_dups, num_hashes=n).collect()
+        )
+        for n in (16, 64)
+    }
+    got["simhash"] = digest(
+        (r.id, r.sig) for r in dedup.simhash_signatures(docs_with_dups).collect()
+    )
+    assert got == {
+        "minhash16": "65de76d567a45820a9c6b34e980e7cc2f0444e969c10dddf378d20976fe68149",
+        "minhash64": "0195b4319533b95e2c1341c6cf137d9b593b5afca710ef6eca6dc8bde5598904",
+        "simhash": "b7a97bd24ba9bf139e075c6dfca5fa01d31f6dfde24fb0ff09d0bea4cc21928f",
+    }
+
+
+def test_signature_builders_make_few_py4j_calls(spark, docs_with_dups):
+    """Building a signature frame is driver work paid on every
+    execution: each ``F.*`` call or Column operator is several Py4J
+    round trips, so 64 hashes built as 64 Column trees cost thousands
+    of calls.  The builders write their wide expressions as one SQL
+    string; the count after the first build repeats exactly."""
+    from tools.trace_query import count_py4j_calls
+
+    for build in (dedup.minhash_signatures, dedup.simhash_signatures):
+        build(docs_with_dups)
+        with count_py4j_calls(spark) as n:
+            build(docs_with_dups)
+        assert n[0] <= 300, (build.__name__, n[0])
+
+
 # --- ngram jaccard ---------------------------------------------------------
 
 def test_ngram_jaccard_exact_values(spark):

@@ -11,7 +11,10 @@ codegen compiles, Catalyst phases, task run/CPU/GC time, shuffle and
 source bytes, table loads, and the split of wall time into layers (see
 its module docstring).  A query whose cold time far exceeds its warm
 time is plan- or compile-bound; one whose warm time stays high is
-execution-bound.  ``--json`` writes every ledger metric.
+execution-bound.  ``py4j_calls`` counts the Py4J call commands the
+builder sent while constructing the query, a driver cost that repeats
+exactly from one build to the next.  ``--json`` writes every ledger
+metric.
 
 Never run it concurrently with other Spark work on the same host.
 """
@@ -19,9 +22,11 @@ Never run it concurrently with other Spark work on the same host.
 from __future__ import annotations
 
 import argparse
+import contextlib
 import json
 import os
 import sys
+import threading
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
@@ -31,6 +36,7 @@ sys.path.insert(0, os.path.join(ROOT, "perfbench"))
 COLUMNS = (
     ("wall_s", "wall_s", 7, 3),
     ("construct_s", "queries.construct_s", 11, 3),
+    ("py4j_calls", "queries.py4j_calls", 10, 0),
     ("jobs", "sched.jobs", 4, 0),
     ("stages", "sched.stages", 6, 0),
     ("tasks", "sched.tasks", 5, 0),
@@ -42,6 +48,30 @@ COLUMNS = (
     ("in_MB", "sources.input_bytes", 6, 2),
     ("shufW_MB", "shuffle.write_bytes", 8, 2),
 )
+
+
+@contextlib.contextmanager
+def count_py4j_calls(spark):
+    """Count the Py4J call commands this thread sends while the block
+    runs; yields a one-element list that holds the count.  Only call
+    commands (``c``) count: py4j's memory-release messages (``m``) are
+    timed by the Python garbage collector, and other threads' calls
+    (listener callbacks) are not the block's."""
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    me = threading.get_ident()
+    count = [0]
+
+    def counting(command, *args, **kwargs):
+        if command.startswith("c") and threading.get_ident() == me:
+            count[0] += 1
+        return send(command, *args, **kwargs)
+
+    client.send_command = counting
+    try:
+        yield count
+    finally:
+        client.send_command = send
 
 
 def _row(name: str, metrics: dict) -> str:
@@ -80,16 +110,21 @@ def main() -> None:
     passes = {}
     try:
         for pass_name in ("cold", "warm"):
+            calls = {}
             for name in args.names:
                 q = ledger.begin(pass_name, name)
                 sc.setJobGroup(f"{pass_name}/{name}/build", name)
-                df = QUERY_REGISTRY[name](spark, args.sf)
+                with count_py4j_calls(spark) as n:
+                    df = QUERY_REGISTRY[name](spark, args.sf)
+                calls[name] = n[0]
                 ledger.sink(q)
                 sc.setJobGroup(f"{pass_name}/{name}/sink", name)
                 df.write.format("noop").mode("overwrite").save()
                 ledger.end(q)
             sc._jsc.clearJobGroup()
             passes[pass_name] = ledger.summarize()
+            for led in passes[pass_name]:
+                led["metrics"]["queries.py4j_calls"] = calls[led["name"]]
     finally:
         ledger.close()
         spark.stop()
