@@ -136,14 +136,15 @@ def minhash_signatures(
 
 def minhash_bands(sig: Column, num_bands: int = 16, rows_per_band: int = 4) -> Column:
     """Split a signature into LSH bands; each band → one 64-bit bucket
-    hash.  Returns array<struct<band:int, bucket:bigint>>.
+    hash.  Returns array<struct<band:int, bucket:bigint>>, or NULL for
+    a NULL signature or one whose first hash is NULL (NULL text).
 
-    Measured note (r8): an unrolled ``F.array(*[struct(lit(b),
+    Measured note: an unrolled ``F.array(*[struct(lit(b),
     xxhash64(sig[i]...))])`` over literal getItems — nominally pure
     codegen vs this interpreted ``transform`` lambda — benched ~2x
     SLOWER at sf0.1 (0.77s vs 0.35s warm for the banding pass), so the
     transform form stays."""
-    return F.transform(
+    bands = F.transform(
         F.sequence(F.lit(0), F.lit(num_bands - 1)),
         lambda b: F.struct(
             b.cast("int").alias("band"),
@@ -158,6 +159,9 @@ def minhash_bands(sig: Column, num_bands: int = 16, rows_per_band: int = 4) -> C
             ).alias("bucket"),
         ),
     )
+    # a NULL signature (NULL text) has no bands: concat_ws drops NULLs,
+    # so its bands would all hash '' and pair every NULL-text document
+    return F.when(sig[0].isNotNull(), bands)
 
 
 def minhash_near_duplicates(
@@ -284,7 +288,9 @@ def simhash_signatures(
     shuffles.
 
     The 64 votes are ONE ``F.expr`` string: built as Column trees they
-    cost about 4,000 Py4J calls per build, as a string under 100."""
+    cost about 4,000 Py4J calls per build, as a string under 100.
+
+    NULL text gives a NULL signature, which pairs with nothing."""
     if bits != 64:
         raise ValueError(f"only 64-bit signatures are supported, got {bits}")
     df = _spread(df)
@@ -299,7 +305,10 @@ def simhash_signatures(
         f"THEN CAST({m}L AS BIGINT) ELSE CAST(0 AS BIGINT) END"
         for m in masks
     )
-    return base.select("id", F.expr(votes).alias("sig"))
+    # NULL text has no signature; without the guard every bit loses its
+    # vote (size(NULL) is -1) and all NULL-text docs share signature 0
+    sig = f"CASE WHEN _hs IS NULL THEN NULL ELSE {votes} END"
+    return base.select("id", F.expr(sig).alias("sig"))
 
 
 def simhash_near_duplicates(

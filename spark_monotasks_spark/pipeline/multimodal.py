@@ -15,7 +15,7 @@ at two levels, stdlib+numpy only (no PIL/librosa/cv2):
   codec — standard Annex-K Huffman/quant tables, DC prediction, AC
   run-length, 2-D DCT — in pure numpy, both directions.
 
-- **video level** (r5): MJPEG-in-AVI — a spec-correct RIFF writer
+- **video level**: MJPEG-in-AVI — a spec-correct RIFF writer
   (``encode_avi_mjpeg``), container walk (``decode_avi_meta``), and
   per-frame decode (``decode_avi_frames`` → ``pipeline.jpeg``), so the
   video modality is a working codec path, not a stub; only the frame
@@ -26,6 +26,16 @@ subsampled JPEG, mp3/aac) remain out of profile: for those,
 strict=True raises ``NotImplementedError`` and strict=False degrades
 to NULL fields (corrupt/undecodable blobs are data, not task
 failures, at 100 TB).
+
+Every blob operator is a per-blob function run by ``_map_blobs(media,
+schema, fn)``.  It selects ``(media_id, blob)`` and runs one
+``mapInPandas``.  ``fn(blob)`` is called for every blob, NULL included,
+and returns the row's values after ``media_id`` in ``schema`` order, or
+None for an all-NULL row.  Each output column's pandas dtype follows
+from its Spark type (``_PANDAS_DTYPES``: nullable Int32/Int64 and
+float64; strings and arrays pass through as objects), and on that Arrow
+path a float NaN becomes NULL, as None does.  Each id→blob generator is
+one ``encode(i) -> bytes`` run by ``_blobs_from_ids``.
 
 Design for 100 TB of media:
 - media rows are *wide* (MBs of binary) — keep ``maxRecordsPerFile`` and
@@ -41,14 +51,18 @@ Design for 100 TB of media:
 
 from __future__ import annotations
 
+import hashlib
 import struct
 import zlib
-from typing import Iterator
+from typing import Callable, Iterator
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from spark_monotasks_spark.pipeline.jpeg import decode_jpeg_pixels, encode_jpeg_pixels
 
 #: typed metadata carried beside each blob; filterable without decoding.
 MEDIA_META_SCHEMA = T.StructType(
@@ -79,9 +93,64 @@ IMAGE_FEATURES_SCHEMA = T.StructType(
     ]
 )
 
+#: what the id→blob generators return
+_BLOB_SCHEMA = T.StructType(
+    [
+        T.StructField("media_id", T.LongType(), False),
+        T.StructField("blob", T.BinaryType(), True),
+    ]
+)
 
-def _decode_image_batch(blobs: pd.Series, strict: bool) -> pd.DataFrame:
-    """Pixel decode + channel statistics per Arrow batch.
+#: nullable pandas dtype of an output column, by its Spark type
+_PANDAS_DTYPES = {T.IntegerType: "Int32", T.LongType: "Int64", T.DoubleType: "float64"}
+
+
+def _map_blobs(media: DataFrame, schema: T.StructType, fn: Callable) -> DataFrame:
+    """``fn(blob)`` over every ``(media_id, blob)`` row of ``media`` in
+    one ``mapInPandas``; the contract is in the module docstring."""
+    names = schema.fieldNames()[1:]
+    dtypes = [_PANDAS_DTYPES.get(type(f.dataType)) for f in schema.fields[1:]]
+    nulls = (None,) * len(names)
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            rows = [nulls if r is None else r for r in map(fn, pdf["blob"])]
+            out = {"media_id": pdf["media_id"]}
+            for k, (name, dtype) in enumerate(zip(names, dtypes)):
+                col = [r[k] for r in rows]
+                out[name] = col if dtype is None else pd.array(col, dtype=dtype)
+            yield pd.DataFrame(out)
+
+    return media.select("media_id", "blob").mapInPandas(run, schema=schema)
+
+
+def _blobs_from_ids(
+    ids: DataFrame, id_col: str, encode: Callable[[int], bytes]
+) -> DataFrame:
+    """One ``(media_id, blob)`` row per id, ``encode(id)`` run in one
+    ``mapInPandas`` — the driver never sees a blob."""
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            blobs = [encode(int(i)) for i in pdf[id_col]]
+            yield pd.DataFrame({"media_id": pdf[id_col], "blob": blobs})
+
+    return ids.select(F.col(id_col).cast("long").alias(id_col)).mapInPandas(
+        run, schema=_BLOB_SCHEMA
+    )
+
+
+def _decode_rgb(b):
+    """RGB8 pixels (h, w, 3) of a PNG or baseline JPEG blob; None for a
+    NULL or undecodable blob."""
+    if b is None:
+        return None
+    px = decode_png_pixels(b)
+    return decode_jpeg_pixels(bytes(b)) if px is None else px
+
+
+def extract_image_features(media: DataFrame, strict: bool = False) -> DataFrame:
+    """Pixel decode + channel statistics of the image rows.
 
     PNG (RGB8) decodes for REAL via :func:`decode_png_pixels` (stdlib
     zlib + numpy, all five scanline filters) and baseline 4:4:4 JPEG
@@ -90,14 +159,17 @@ def _decode_image_batch(blobs: pd.Series, strict: bool) -> pd.DataFrame:
     [mean_r, mean_g, mean_b, std_r, std_g, std_b, mean_gray,
     frac_nonzero].  Outside-profile input (progressive/subsampled JPEG,
     other formats): strict=True raises NotImplementedError,
-    strict=False yields NULLs (data, not errors)."""
-    from spark_monotasks_spark.pipeline.jpeg import decode_jpeg_pixels
+    strict=False yields NULLs (data, not errors).
 
-    widths, heights, feats = [], [], []
-    for b in blobs:
-        px = decode_png_pixels(b) if b is not None else None
-        if px is None and b is not None:
-            px = decode_jpeg_pixels(bytes(b))
+    Memory per task is constant regardless of partition row count:
+    batch row count is governed by
+    ``spark.sql.execution.arrow.maxRecordsPerBatch`` (session-level);
+    for MB-sized blobs set it low BEFORE building the session — there is
+    no honest per-operator override, which is why no batch-size
+    parameter is offered here."""
+
+    def features(b):
+        px = _decode_rgb(b)
         if px is None:
             if strict and b is not None:
                 raise NotImplementedError(
@@ -105,56 +177,17 @@ def _decode_image_batch(blobs: pd.Series, strict: bool) -> pd.DataFrame:
                     "4:4:4 JPEG (progressive/subsampled JPEG and other "
                     "formats need codec libraries not in this container)"
                 )
-            widths.append(None)
-            heights.append(None)
-            feats.append(None)
-            continue
+            return None
         h, w, _ = px.shape
         f = px.astype("float64")
-        means = f.mean(axis=(0, 1))
-        stds = f.std(axis=(0, 1))
-        feats.append(
-            [float(x) for x in means]
-            + [float(x) for x in stds]
-            + [float(f.mean()), float((px.any(axis=2)).mean())]
-        )
-        widths.append(w)
-        heights.append(h)
-    return pd.DataFrame(
-        {
-            "width": pd.array(widths, dtype="Int32"),
-            "height": pd.array(heights, dtype="Int32"),
-            "features": feats,
-        }
-    )
-
-
-def extract_image_features(media: DataFrame, strict: bool = False) -> DataFrame:
-    """Decode + feature-extract over Arrow batches via ``mapInPandas``.
-
-    The iterator-of-batches signature means constant memory per task
-    regardless of partition row count.  Batch row count is governed by
-    ``spark.sql.execution.arrow.maxRecordsPerBatch`` (session-level);
-    for MB-sized blobs set it low BEFORE building the session — there is
-    no honest per-operator override, which is why no batch-size
-    parameter is offered here."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            feats = _decode_image_batch(pdf["blob"], strict)
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "width": feats["width"],
-                    "height": feats["height"],
-                    "features": feats["features"],
-                }
-            )
+        stats = [*f.mean(axis=(0, 1)), *f.std(axis=(0, 1))]
+        stats += [f.mean(), px.any(axis=2).mean()]
+        return w, h, [float(x) for x in stats]
 
     # metadata-first pruning (module design note): only image rows reach
     # the decode UDF — same filter as the audio/resize/frame siblings
     images = media.filter(F.col("meta.media_type") == "image")
-    return images.mapInPandas(run, schema=IMAGE_FEATURES_SCHEMA)
+    return _map_blobs(images, IMAGE_FEATURES_SCHEMA, features)
 
 
 AUDIO_FEATURES_SCHEMA = T.StructType(
@@ -211,7 +244,7 @@ def _mfcc_mean(mono, rate: int, n_mfcc: int = 13, n_mels: int = 26):
 def extract_audio_features(
     media: DataFrame, strict: bool = False, window_ms: int = 25
 ) -> DataFrame:
-    """REAL audio decode + MFCC over Arrow batches: 16-bit PCM WAV
+    """REAL audio decode + MFCC of the audio rows: 16-bit PCM WAV
     decodes via :func:`decode_wav_samples` (RIFF walk + numpy
     frombuffer), window count comes from the ACTUAL sample count, and
     the 13 MFCC coefficients are computed for real (:func:`_mfcc_mean` —
@@ -220,43 +253,31 @@ def extract_audio_features(
     strict=True raises for undecodable blobs, strict=False yields NULLs.
     """
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            n_windows, mfcc = [], []
-            for b in pdf["blob"]:
-                dec = decode_wav_samples(b) if b is not None else None
-                if dec is None:
-                    if strict and b is not None:
-                        raise NotImplementedError(
-                            "sample decode implemented for PCM16 WAV only "
-                            "(compressed codecs need libraries not in this "
-                            "container)"
-                        )
-                    n_windows.append(None)
-                    mfcc.append(None)
-                    continue
-                rate, _channels, samples = dec
-                mono = samples.mean(axis=1) / 32768.0
-                win = max(int(rate * window_ms / 1000), 1)
-                n_windows.append(int(len(mono) // win))
-                mfcc.append(_mfcc_mean(mono, rate))
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "n_windows": pd.array(n_windows, dtype="Int32"),
-                    "mfcc": mfcc,
-                }
-            )
+    def features(b):
+        dec = decode_wav_samples(b)
+        if dec is None:
+            if strict and b is not None:
+                raise NotImplementedError(
+                    "sample decode implemented for PCM16 WAV only "
+                    "(compressed codecs need libraries not in this "
+                    "container)"
+                )
+            return None
+        rate, _channels, samples = dec
+        mono = samples.mean(axis=1) / 32768.0
+        win = max(int(rate * window_ms / 1000), 1)
+        return int(len(mono) // win), _mfcc_mean(mono, rate)
 
     audio = media.filter(F.col("meta.media_type") == "audio")
-    return audio.mapInPandas(run, schema=AUDIO_FEATURES_SCHEMA)
+    return _map_blobs(audio, AUDIO_FEATURES_SCHEMA, features)
 
 
 def resize_plan(media: DataFrame, max_side: int = 256) -> DataFrame:
     """Image resize *plan*: compute target dims from typed metadata (pure
-    SQL, no decode) so the stubbed decode/resize UDF only touches rows
-    whose dims actually change — metadata-first pruning, the multimodal
-    scale pattern."""
+    SQL, no decode) so a later decode/resize step need only touch the
+    rows whose dims actually change (``needs_resize``) — metadata-first
+    pruning, the multimodal scale pattern.  No resize operator ships
+    here; the plan is the product."""
     w, h = F.col("meta.width"), F.col("meta.height")
     scale = F.least(
         F.lit(1.0), F.lit(max_side) / F.greatest(w, h).cast("double")
@@ -623,75 +644,40 @@ def probe_media_meta(media: DataFrame) -> DataFrame:
     typed ``meta`` struct other operators filter on — at ingest time it
     runs once per blob and every downstream decode prunes on its output.
     """
+    names = PROBED_META_SCHEMA.fieldNames()[1:]
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            parsed = [parse_media_header(blob) for blob in pdf["blob"]]
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "codec": [p["codec"] for p in parsed],
-                    "width": pd.array([p["width"] for p in parsed], dtype="Int32"),
-                    "height": pd.array([p["height"] for p in parsed], dtype="Int32"),
-                    "sample_rate": pd.array(
-                        [p["sample_rate"] for p in parsed], dtype="Int32"
-                    ),
-                    "duration_ms": pd.array(
-                        [p["duration_ms"] for p in parsed], dtype="Int64"
-                    ),
-                }
-            )
+    def header(b):
+        parsed = parse_media_header(b)
+        return [parsed[k] for k in names]
 
-    return media.select("media_id", "blob").mapInPandas(run, schema=PROBED_META_SCHEMA)
+    return _map_blobs(media, PROBED_META_SCHEMA, header)
 
 
 def media_from_ids(ids: DataFrame, id_col: str = "media_id") -> DataFrame:
     """Deterministic real-blob media table keyed off an id column:
-    id % 3 == 0 → PNG, 1 → JPEG header, 2 → WAV, with closed-form
+    id % 3 == 0 → PNG, 1 → JPEG, 2 → WAV, with closed-form
     dims/rates (documented in the media_meta_extract oracle).  Blob
     encoding runs distributed in mapInPandas — the driver never sees
     a blob."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def encode(i: int) -> bytes:
+        if i % 3 == 0:
+            return encode_png(16 + i % 48, 16 + i % 32, pattern="gradient")
+        if i % 3 == 1:
+            # full scan-bearing baseline JPEG (linear gradient — dims
+            # keep x+y+c < 256 so no wrap), pixel-decodable by
+            # pipeline.jpeg; SOF0 dims match the header-only fixture so
+            # media_meta_extract's oracle is unchanged
+            w_j, h_j = 32 + i % 64, 24 + i % 40
+            x = np.arange(w_j)[None, :, None]
+            y = np.arange(h_j)[:, None, None]
+            c = np.arange(3)[None, None, :]
+            img = ((x + y + c) % 256).astype(np.uint8)
+            return encode_jpeg_pixels(img, quality=92)
+        rate = 8000 + (i % 4) * 4000
+        return encode_wav(rate, (i % 5 + 1) * rate // 10, pattern="ramp")
 
-        from spark_monotasks_spark.pipeline.jpeg import encode_jpeg_pixels
-
-        for pdf in batches:
-            blobs = []
-            for i in pdf[id_col]:
-                i = int(i)
-                if i % 3 == 0:
-                    blobs.append(
-                        encode_png(16 + i % 48, 16 + i % 32, pattern="gradient")
-                    )
-                elif i % 3 == 1:
-                    # full scan-bearing baseline JPEG (linear gradient —
-                    # dims keep x+y+c < 256 so no wrap), pixel-decodable
-                    # by pipeline.jpeg; SOF0 dims match the header-only
-                    # fixture so media_meta_extract's oracle is unchanged
-                    w_j, h_j = 32 + i % 64, 24 + i % 40
-                    x = np.arange(w_j)[None, :, None]
-                    y = np.arange(h_j)[:, None, None]
-                    c = np.arange(3)[None, None, :]
-                    img = ((x + y + c) % 256).astype(np.uint8)
-                    blobs.append(encode_jpeg_pixels(img, quality=92))
-                else:
-                    rate = 8000 + (i % 4) * 4000
-                    blobs.append(
-                        encode_wav(rate, (i % 5 + 1) * rate // 10, pattern="ramp")
-                    )
-            yield pd.DataFrame({"media_id": pdf[id_col], "blob": blobs})
-
-    out_schema = T.StructType(
-        [
-            T.StructField("media_id", T.LongType(), False),
-            T.StructField("blob", T.BinaryType(), True),
-        ]
-    )
-    return ids.select(F.col(id_col).cast("long").alias(id_col)).mapInPandas(
-        run, schema=out_schema
-    )
+    return _blobs_from_ids(ids, id_col, encode)
 
 
 PIXEL_STATS_SCHEMA = T.StructType(
@@ -715,41 +701,16 @@ def image_pixel_stats(media: DataFrame) -> DataFrame:
     Undecodable blobs yield NULL stats.  Arrow-batched mapInPandas;
     blobs never leave their partition."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from spark_monotasks_spark.pipeline.jpeg import decode_jpeg_pixels
+    def stats(b):
+        px = _decode_rgb(b)
+        if px is None:
+            return None
+        h, w, _ = px.shape
+        f = px.astype("float64")
+        means = [round(float(f[:, :, c].mean()), 4) for c in range(3)]
+        return (w, h, *means, round(float(f[:, :, 0].std()), 4))
 
-        for pdf in batches:
-            out = {k: [] for k in
-                   ("width", "height", "mean_r", "mean_g", "mean_b", "std_r")}
-            for b in pdf["blob"]:
-                px = decode_png_pixels(b) if b is not None else None
-                if px is None and b is not None:
-                    px = decode_jpeg_pixels(bytes(b))
-                if px is None:
-                    for k in out:
-                        out[k].append(None)
-                    continue
-                h, w, _ = px.shape
-                f = px.astype("float64")
-                out["width"].append(w)
-                out["height"].append(h)
-                out["mean_r"].append(round(float(f[:, :, 0].mean()), 4))
-                out["mean_g"].append(round(float(f[:, :, 1].mean()), 4))
-                out["mean_b"].append(round(float(f[:, :, 2].mean()), 4))
-                out["std_r"].append(round(float(f[:, :, 0].std()), 4))
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "width": pd.array(out["width"], dtype="Int32"),
-                    "height": pd.array(out["height"], dtype="Int32"),
-                    "mean_r": pd.array(out["mean_r"], dtype="float64"),
-                    "mean_g": pd.array(out["mean_g"], dtype="float64"),
-                    "mean_b": pd.array(out["mean_b"], dtype="float64"),
-                    "std_r": pd.array(out["std_r"], dtype="float64"),
-                }
-            )
-
-    return media.select("media_id", "blob").mapInPandas(run, schema=PIXEL_STATS_SCHEMA)
+    return _map_blobs(media, PIXEL_STATS_SCHEMA, stats)
 
 
 SAMPLE_STATS_SCHEMA = T.StructType(
@@ -769,39 +730,23 @@ def audio_sample_stats(media: DataFrame) -> DataFrame:
     (:func:`decode_wav_samples`): mean / RMS / peak of the raw int16
     values (mono mix), rounded for cross-engine parity.  Undecodable
     blobs yield NULL stats."""
-    import numpy as np
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in
-                   ("sample_rate", "n_samples", "mean_amp", "rms_amp", "peak_amp")}
-            for b in pdf["blob"]:
-                dec = decode_wav_samples(b) if b is not None else None
-                if dec is None:
-                    for k in out:
-                        out[k].append(None)
-                    continue
-                rate, _ch, samples = dec
-                mono = samples.mean(axis=1)
-                out["sample_rate"].append(rate)
-                out["n_samples"].append(samples.shape[0])
-                out["mean_amp"].append(round(float(mono.mean()), 6))
-                out["rms_amp"].append(
-                    round(float(np.sqrt((mono.astype("float64") ** 2).mean())), 6)
-                )
-                out["peak_amp"].append(int(np.abs(mono).max()))
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "sample_rate": pd.array(out["sample_rate"], dtype="Int32"),
-                    "n_samples": pd.array(out["n_samples"], dtype="Int64"),
-                    "mean_amp": pd.array(out["mean_amp"], dtype="float64"),
-                    "rms_amp": pd.array(out["rms_amp"], dtype="float64"),
-                    "peak_amp": pd.array(out["peak_amp"], dtype="Int32"),
-                }
-            )
+    def stats(b):
+        dec = decode_wav_samples(b)
+        if dec is None:
+            return None
+        rate, _ch, samples = dec
+        mono = samples.mean(axis=1)
+        rms = np.sqrt((mono.astype("float64") ** 2).mean())
+        return (
+            rate,
+            samples.shape[0],
+            round(float(mono.mean()), 6),
+            round(float(rms), 6),
+            int(np.abs(mono).max()),
+        )
 
-    return media.select("media_id", "blob").mapInPandas(run, schema=SAMPLE_STATS_SCHEMA)
+    return _map_blobs(media, SAMPLE_STATS_SCHEMA, stats)
 
 
 BAND_FP_SCHEMA = T.StructType(
@@ -831,37 +776,20 @@ def audio_band_fingerprint(media: DataFrame, n_bands: int = 8) -> DataFrame:
     Arrow-batched mapInPandas; the driver never sees a blob; output is
     4 scalar columns — the dedup/near-dup join key for audio corpora."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"n_samples": [], "e0": [], "fp": []}
-            for b in pdf["blob"]:
-                dec = decode_wav_samples(b) if b is not None else None
-                if dec is None or dec[2].shape[0] < n_bands:
-                    for k in out:
-                        out[k].append(None)
-                    continue
-                _rate, _ch, samples = dec
-                mono = samples[:, 0].astype("int64")
-                w = mono.shape[0] // n_bands
-                e = [int((mono[k * w:(k + 1) * w] ** 2).sum())
-                     for k in range(n_bands)]
-                fp = 0
-                for k in range(1, n_bands):
-                    if e[k] > e[k - 1]:
-                        fp |= 1 << (k - 1)
-                out["n_samples"].append(int(mono.shape[0]))
-                out["e0"].append(e[0])
-                out["fp"].append(fp)
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "n_samples": pd.array(out["n_samples"], dtype="Int64"),
-                    "e0": pd.array(out["e0"], dtype="Int64"),
-                    "fp": pd.array(out["fp"], dtype="Int32"),
-                }
-            )
+    def fingerprint(b):
+        dec = decode_wav_samples(b)
+        if dec is None or dec[2].shape[0] < n_bands:
+            return None
+        mono = dec[2][:, 0].astype("int64")
+        w = mono.shape[0] // n_bands
+        e = [int((mono[k * w:(k + 1) * w] ** 2).sum()) for k in range(n_bands)]
+        fp = 0
+        for k in range(1, n_bands):
+            if e[k] > e[k - 1]:
+                fp |= 1 << (k - 1)
+        return int(mono.shape[0]), e[0], fp
 
-    return media.select("media_id", "blob").mapInPandas(run, schema=BAND_FP_SCHEMA)
+    return _map_blobs(media, BAND_FP_SCHEMA, fingerprint)
 
 
 # ---------------------------------------------------------------------------
@@ -874,12 +802,9 @@ def audio_band_fingerprint(media: DataFrame, n_bands: int = 8) -> DataFrame:
 # frame pixels are lossy (JPEG), mirroring the image path's split
 # between media_meta_extract (oracle) and jpeg_decode_stats (rows-only).
 
-import struct as _struct
-
-
 def _avi_chunk(fourcc: bytes, payload: bytes) -> bytes:
     pad = b"\x00" if len(payload) % 2 else b""
-    return fourcc + _struct.pack("<I", len(payload)) + payload + pad
+    return fourcc + struct.pack("<I", len(payload)) + payload + pad
 
 
 def _avi_list(list_type: bytes, payload: bytes) -> bytes:
@@ -898,14 +823,14 @@ def encode_avi_mjpeg(frames, fps: int = 10) -> bytes:
     jpegs = [encode_jpeg_pixels(f, quality=92) for f in frames]
     biggest = max(len(j) for j in jpegs)
     uspf = 1_000_000 // fps
-    avih = _struct.pack(
+    avih = struct.pack(
         "<14I", uspf, 0, 0, 0x10, len(frames), 0, 1, biggest, w, h, 0, 0, 0, 0
     )
-    strh = b"vids" + b"MJPG" + _struct.pack(
+    strh = b"vids" + b"MJPG" + struct.pack(
         "<IHHIIIIIIII4H",
         0, 0, 0, 0, 1, fps, 0, len(frames), biggest, 10_000, 0, 0, 0, w, h,
     )
-    strf = _struct.pack(
+    strf = struct.pack(
         "<IiiHH4sIiiII", 40, w, h, 1, 24, b"MJPG", w * h * 3, 0, 0, 0, 0
     )
     hdrl = _avi_list(
@@ -915,7 +840,7 @@ def encode_avi_mjpeg(frames, fps: int = 10) -> bytes:
     )
     movi = _avi_list(b"movi", b"".join(_avi_chunk(b"00dc", j) for j in jpegs))
     payload = b"AVI " + hdrl + movi
-    return b"RIFF" + _struct.pack("<I", len(payload)) + payload
+    return b"RIFF" + struct.pack("<I", len(payload)) + payload
 
 
 def _riff_children(b: bytes, off: int, end: int):
@@ -923,7 +848,7 @@ def _riff_children(b: bytes, off: int, end: int):
     for each chunk in [off, end); tolerant of truncation (stops)."""
     while off + 8 <= end:
         fourcc = b[off:off + 4]
-        (size,) = _struct.unpack("<I", b[off + 4:off + 8])
+        (size,) = struct.unpack("<I", b[off + 4:off + 8])
         start = off + 8
         if start + size > end:
             return
@@ -950,7 +875,7 @@ def decode_avi_meta(b) -> dict | None:
         if fourcc == b"LIST" and ltype == b"hdrl":
             for f2, _, s2, z2 in _riff_children(b, start, start + size):
                 if f2 == b"avih" and z2 >= 40:
-                    uspf, _, _, _, total, _, _, _, w, h = _struct.unpack(
+                    uspf, _, _, _, total, _, _, _, w, h = struct.unpack(
                         "<10I", b[s2:s2 + 40]
                     )
                     meta = {
@@ -1005,34 +930,18 @@ def video_from_ids(
     varying fps plants container-different/content-identical pairs
     (the case byte-level dedup misses; see video_content_neardup)."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            blobs = []
-            for i in pdf[id_col]:
-                i = int(i)
-                w, h = 16 + (i % 3) * 8, 16 + (i % 2) * 8
-                x = np.arange(w)[None, :, None]
-                y = np.arange(h)[:, None, None]
-                c = np.arange(3)[None, None, :]
-                frames = [
-                    ((x + y + 3 * f + c) % 256).astype(np.uint8)
-                    for f in range(2 + i % 4)
-                ]
-                fps = 10 if fps_fn is None else int(fps_fn(i))
-                blobs.append(encode_avi_mjpeg(frames, fps=fps))
-            yield pd.DataFrame({"media_id": pdf[id_col], "blob": blobs})
-
-    out_schema = T.StructType(
-        [
-            T.StructField("media_id", T.LongType(), False),
-            T.StructField("blob", T.BinaryType(), True),
+    def encode(i: int) -> bytes:
+        w, h = 16 + (i % 3) * 8, 16 + (i % 2) * 8
+        x = np.arange(w)[None, :, None]
+        y = np.arange(h)[:, None, None]
+        c = np.arange(3)[None, None, :]
+        frames = [
+            ((x + y + 3 * f + c) % 256).astype(np.uint8) for f in range(2 + i % 4)
         ]
-    )
-    return ids.select(F.col(id_col).cast("long").alias(id_col)).mapInPandas(
-        run, schema=out_schema
-    )
+        fps = 10 if fps_fn is None else int(fps_fn(i))
+        return encode_avi_mjpeg(frames, fps=fps)
+
+    return _blobs_from_ids(ids, id_col, encode)
 
 
 VIDEO_META_SCHEMA = T.StructType(
@@ -1052,30 +961,13 @@ def video_probe_meta(media: DataFrame) -> DataFrame:
     probe_media_meta.  Exact (no lossy codec in play), so fully
     oracle-checkable.  Undecodable blobs yield NULL columns."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            cols = {k: [] for k in ("width", "height", "n_frames", "us_per_frame")}
-            for b in pdf["blob"]:
-                m = decode_avi_meta(b)
-                cols["width"].append(None if m is None else m["width"])
-                cols["height"].append(None if m is None else m["height"])
-                cols["n_frames"].append(None if m is None else m["n_frames"])
-                cols["us_per_frame"].append(
-                    None if m is None else m["us_per_frame"]
-                )
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "width": pd.array(cols["width"], dtype="Int32"),
-                    "height": pd.array(cols["height"], dtype="Int32"),
-                    "n_frames": pd.array(cols["n_frames"], dtype="Int32"),
-                    "us_per_frame": pd.array(cols["us_per_frame"], dtype="Int32"),
-                }
-            )
+    names = VIDEO_META_SCHEMA.fieldNames()[1:]
 
-    return media.select("media_id", "blob").mapInPandas(
-        run, schema=VIDEO_META_SCHEMA
-    )
+    def meta(b):
+        m = decode_avi_meta(b)
+        return None if m is None else [m[k] for k in names]
+
+    return _map_blobs(media, VIDEO_META_SCHEMA, meta)
 
 
 VIDEO_STATS_SCHEMA = T.StructType(
@@ -1098,50 +990,27 @@ def video_frame_stats(media: DataFrame) -> DataFrame:
     axis a frame-sampling pipeline cares about).  Lossy by format →
     rows-only in the contract; bounded error vs the generative gradient
     asserted in tests."""
-    import numpy as np
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            cols = {k: [] for k in (
-                "n_frames", "width", "height",
-                "mean_luma", "first_frame_luma", "last_frame_luma")}
-            for b in pdf["blob"]:
-                frames = decode_avi_frames(b)
-                if not frames:
-                    for k in cols:
-                        cols[k].append(None)
-                    continue
-                lumas = [float(f.astype(np.float64).mean()) for f in frames]
-                h, w, _ = frames[0].shape
-                cols["n_frames"].append(len(frames))
-                cols["width"].append(w)
-                cols["height"].append(h)
-                cols["mean_luma"].append(round(sum(lumas) / len(lumas), 4))
-                cols["first_frame_luma"].append(round(lumas[0], 4))
-                cols["last_frame_luma"].append(round(lumas[-1], 4))
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "n_frames": pd.array(cols["n_frames"], dtype="Int32"),
-                    "width": pd.array(cols["width"], dtype="Int32"),
-                    "height": pd.array(cols["height"], dtype="Int32"),
-                    "mean_luma": pd.array(cols["mean_luma"], dtype="float64"),
-                    "first_frame_luma": pd.array(
-                        cols["first_frame_luma"], dtype="float64"
-                    ),
-                    "last_frame_luma": pd.array(
-                        cols["last_frame_luma"], dtype="float64"
-                    ),
-                }
-            )
+    def stats(b):
+        frames = decode_avi_frames(b)
+        if not frames:
+            return None
+        lumas = [float(f.astype(np.float64).mean()) for f in frames]
+        h, w, _ = frames[0].shape
+        return (
+            len(frames),
+            w,
+            h,
+            round(sum(lumas) / len(lumas), 4),
+            round(lumas[0], 4),
+            round(lumas[-1], 4),
+        )
 
-    return media.select("media_id", "blob").mapInPandas(
-        run, schema=VIDEO_STATS_SCHEMA
-    )
+    return _map_blobs(media, VIDEO_STATS_SCHEMA, stats)
 
 
 # ---------------------------------------------------------------------------
-# Perceptual hashing (aHash) + image near-duplicate detection (r8)
+# Perceptual hashing (aHash) + image near-duplicate detection
 # ---------------------------------------------------------------------------
 
 def encode_png_rgb(img) -> bytes:
@@ -1218,24 +1087,11 @@ def image_ahash(media: DataFrame, grid: int = 8) -> DataFrame:
     per image regardless of image size — the only thing that ever
     shuffles downstream."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from spark_monotasks_spark.pipeline.jpeg import decode_jpeg_pixels
+    def ahash(b):
+        px = _decode_rgb(b)
+        return None if px is None else (ahash_int(px, grid),)
 
-        for pdf in batches:
-            hashes = []
-            for b in pdf["blob"]:
-                px = decode_png_pixels(b) if b is not None else None
-                if px is None and b is not None:
-                    px = decode_jpeg_pixels(bytes(b))
-                hashes.append(None if px is None else ahash_int(px, grid))
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "ahash": pd.array(hashes, dtype="Int64"),
-                }
-            )
-
-    return media.select("media_id", "blob").mapInPandas(run, schema=AHASH_SCHEMA)
+    return _map_blobs(media, AHASH_SCHEMA, ahash)
 
 
 def audio_from_ids(
@@ -1248,28 +1104,13 @@ def audio_from_ids(
     byte-different twins of the same content (see
     audio_content_neardup)."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            blobs = []
-            for i in pdf[id_col]:
-                i = int(i)
-                rate = 8000 + (i % 4) * 4000
-                n = (i % 5 + 1) * rate // 10
-                extra = None if extra_chunk_fn is None else extra_chunk_fn(i)
-                blobs.append(
-                    encode_wav(rate, n, pattern="ramp", extra_chunk=extra)
-                )
-            yield pd.DataFrame({"media_id": pdf[id_col], "blob": blobs})
+    def encode(i: int) -> bytes:
+        rate = 8000 + (i % 4) * 4000
+        n = (i % 5 + 1) * rate // 10
+        extra = None if extra_chunk_fn is None else extra_chunk_fn(i)
+        return encode_wav(rate, n, pattern="ramp", extra_chunk=extra)
 
-    out_schema = T.StructType(
-        [
-            T.StructField("media_id", T.LongType(), False),
-            T.StructField("blob", T.BinaryType(), True),
-        ]
-    )
-    return ids.select(F.col(id_col).cast("long").alias(id_col)).mapInPandas(
-        run, schema=out_schema
-    )
+    return _blobs_from_ids(ids, id_col, encode)
 
 
 AUDIO_SIG_SCHEMA = T.StructType(
@@ -1288,41 +1129,19 @@ def audio_content_signature(media: DataFrame) -> DataFrame:
     invariant to container metadata chunks that byte-level hashing is
     hostage to.  ``blob_md5`` rides along as the byte-level control.
     Arrow-batched; blobs never leave their partition."""
-    import hashlib
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import struct as _s
+    def signature(b):
+        if b is None:
+            return None
+        blob_md5 = hashlib.md5(bytes(b)).hexdigest()
+        dec = decode_wav_samples(b)
+        if dec is None:
+            return None, None, blob_md5
+        rate, ch, samples = dec
+        content = hashlib.md5(struct.pack("<II", rate, ch) + samples.tobytes())
+        return int(samples.shape[0]), content.hexdigest(), blob_md5
 
-        for pdf in batches:
-            out = {"n_samples": [], "content_sig": [], "blob_md5": []}
-            for b in pdf["blob"]:
-                dec = decode_wav_samples(b) if b is not None else None
-                if dec is None:
-                    out["n_samples"].append(None)
-                    out["content_sig"].append(None)
-                    out["blob_md5"].append(
-                        None if b is None else hashlib.md5(bytes(b)).hexdigest()
-                    )
-                    continue
-                rate, ch, samples = dec
-                h = hashlib.md5(
-                    _s.pack("<II", rate, ch) + samples.tobytes()
-                ).hexdigest()
-                out["n_samples"].append(int(samples.shape[0]))
-                out["content_sig"].append(h)
-                out["blob_md5"].append(hashlib.md5(bytes(b)).hexdigest())
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "n_samples": pd.array(out["n_samples"], dtype="Int64"),
-                    "content_sig": out["content_sig"],
-                    "blob_md5": out["blob_md5"],
-                }
-            )
-
-    return media.select("media_id", "blob").mapInPandas(
-        run, schema=AUDIO_SIG_SCHEMA
-    )
+    return _map_blobs(media, AUDIO_SIG_SCHEMA, signature)
 
 
 VIDEO_SIG_SCHEMA = T.StructType(
@@ -1346,39 +1165,21 @@ def video_signature(media: DataFrame, grid: int = 8) -> DataFrame:
     content hashing finds that byte hashing misses.  Arrow-batched
     mapInPandas; blobs never leave their partition; output is one
     short string per video."""
-    import hashlib
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"n_frames": [], "frame_sig": [], "blob_md5": []}
-            for b in pdf["blob"]:
-                frames = decode_avi_frames(b) if b is not None else None
-                if not frames:
-                    out["n_frames"].append(None)
-                    out["frame_sig"].append(None)
-                    out["blob_md5"].append(
-                        None if b is None else hashlib.md5(bytes(b)).hexdigest()
-                    )
-                    continue
-                hs = []
-                for fr in frames:
-                    hv = ahash_int(fr, grid)
-                    hs.append("x" if hv is None else format(hv & (2**64 - 1), "016x"))
-                out["n_frames"].append(len(frames))
-                out["frame_sig"].append("-".join(hs))
-                out["blob_md5"].append(hashlib.md5(bytes(b)).hexdigest())
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "n_frames": pd.array(out["n_frames"], dtype="Int32"),
-                    "frame_sig": out["frame_sig"],
-                    "blob_md5": out["blob_md5"],
-                }
-            )
+    def signature(b):
+        if b is None:
+            return None
+        blob_md5 = hashlib.md5(bytes(b)).hexdigest()
+        frames = decode_avi_frames(b)
+        if not frames:
+            return None, None, blob_md5
+        hs = [ahash_int(fr, grid) for fr in frames]
+        sig = "-".join(
+            "x" if h is None else format(h & (2**64 - 1), "016x") for h in hs
+        )
+        return len(frames), sig, blob_md5
 
-    return media.select("media_id", "blob").mapInPandas(
-        run, schema=VIDEO_SIG_SCHEMA
-    )
+    return _map_blobs(media, VIDEO_SIG_SCHEMA, signature)
 
 
 def ahash_near_duplicates(
@@ -1463,43 +1264,22 @@ def noise_media_from_ids(ids: DataFrame, id_col: str = "media_id",
     ground truth is closed-form, the pipeline under test is real
     (encode → PNG decode → hash → banding join)."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    yy, xx = np.meshgrid(np.arange(side), np.arange(side), indexing="ij")
+    cc = np.arange(3)
+    base_grid = (
+        xx[:, :, None] * 31 + yy[:, :, None] * 17 + cc[None, None, :] * 7
+    ).astype(np.uint64)
 
-        yy, xx = np.meshgrid(
-            np.arange(side), np.arange(side), indexing="ij"
-        )
-        cc = np.arange(3)
-        base_grid = (
-            xx[:, :, None] * 31 + yy[:, :, None] * 17 + cc[None, None, :] * 7
-        ).astype(np.uint64)
-        for pdf in batches:
-            blobs = []
-            for i in pdf[id_col]:
-                i = int(i)
-                seed = np.uint64(i // 2)
-                mixed = (base_grid + seed * np.uint64(1000003)) * np.uint64(
-                    2654435761
-                )
-                img = ((mixed >> np.uint64(16)) % np.uint64(256)).astype(
-                    np.uint8
-                )
-                if i % 2 == 1:
-                    for up, dn in ((0, 1), (1, 2), (0, 2), (1, 0), (2, 1),
-                                   (2, 0)):
-                        if img[0, 0, up] < 255 and img[0, 0, dn] > 0:
-                            img[0, 0, up] += 1
-                            img[0, 0, dn] -= 1
-                            break
-                blobs.append(encode_png_rgb(img))
-            yield pd.DataFrame({"media_id": pdf[id_col], "blob": blobs})
+    def encode(i: int) -> bytes:
+        seed = np.uint64(i // 2)
+        mixed = (base_grid + seed * np.uint64(1000003)) * np.uint64(2654435761)
+        img = ((mixed >> np.uint64(16)) % np.uint64(256)).astype(np.uint8)
+        if i % 2 == 1:
+            for up, dn in ((0, 1), (1, 2), (0, 2), (1, 0), (2, 1), (2, 0)):
+                if img[0, 0, up] < 255 and img[0, 0, dn] > 0:
+                    img[0, 0, up] += 1
+                    img[0, 0, dn] -= 1
+                    break
+        return encode_png_rgb(img)
 
-    out_schema = T.StructType(
-        [
-            T.StructField("media_id", T.LongType(), False),
-            T.StructField("blob", T.BinaryType(), True),
-        ]
-    )
-    return ids.select(F.col(id_col).cast("long").alias(id_col)).mapInPandas(
-        run, schema=out_schema
-    )
+    return _blobs_from_ids(ids, id_col, encode)

@@ -85,6 +85,50 @@ def test_simhash_identical_and_near(spark, docs_with_dups):
     assert found[(0, 3)] == 0
 
 
+@pytest.fixture(scope="module")
+def docs_with_null_text(spark):
+    """40 NULL-text documents beside one real near-duplicate pair."""
+    rows = [(i, None) for i in range(40)] + [
+        (100, "the quick brown fox jumps over the lazy dog near the river bank"),
+        (101, "the quick brown fox jumps over the lazy dog near the river bend"),
+    ]
+    return spark.createDataFrame(rows, "doc_id long, text string")
+
+
+def test_simhash_null_text_has_no_signature(spark, docs_with_null_text):
+    """NULL text has a NULL SimHash, so NULL-text documents never pair:
+    a signature of 0 for each of them paired all 780 of their pairs at
+    hamming 0."""
+    sigs = dedup.simhash_signatures(docs_with_null_text).collect()
+    sigs = {r.id: r.sig for r in sigs}
+    assert [i for i, s in sigs.items() if s is None] == list(range(40))
+    pairs = dedup.simhash_near_duplicates(
+        docs_with_null_text, max_hamming=6, num_bands=8
+    ).collect()
+    assert [(r.id_a, r.id_b) for r in pairs] == [(100, 101)]
+
+
+def test_minhash_bands_of_null_signature_are_null(spark, docs_with_null_text):
+    """A NULL signature, or one of NULL hashes (NULL text at k >= 2),
+    has no LSH bands, so NULL-text documents never enter the banding
+    self-join; with bands they all hashed '' and shared every bucket."""
+    sigs = spark.createDataFrame(
+        [(0, None), (1, [None] * 64), (2, list(range(64)))],
+        "id long, sig array<bigint>",
+    )
+    bands = {
+        r.id: r.bands
+        for r in sigs.select("id", dedup.minhash_bands(F.col("sig")).alias("bands"))
+        .collect()
+    }
+    assert bands[0] is None and bands[1] is None
+    assert [b.band for b in bands[2]] == list(range(16))
+    pairs = dedup.minhash_near_duplicates(
+        docs_with_null_text, shingle_k=2, jaccard_threshold=0.4
+    ).collect()
+    assert [(r.id_a, r.id_b) for r in pairs] == [(100, 101)]
+
+
 def test_signature_values_pinned(spark, docs_with_dups):
     """MinHash (16 and 64 hashes) and SimHash signature values are a
     stored format: a near-dup index built with one release must stay
@@ -741,6 +785,156 @@ def test_probe_media_meta_distributed(spark):
     )
     row = multimodal.probe_media_meta(corrupt).first()
     assert row.codec is None and row.width is None
+
+
+#: sha256 of each multimodal operator's sorted rows over the inputs of
+#: test_multimodal_outputs_pinned
+_MULTIMODAL_PINS = {
+    "audio_band_fingerprint":
+        "bb4b0469591ed610a8dcac56ce2872684b11f992b5ee43696b6c02adc052ab22",
+    "audio_band_fingerprint_4":
+        "6ad4aa2918f54a36a63fb8faf5a1a412434f441680e07ec7bf48f38803e40790",
+    "audio_content_signature":
+        "46cbf4cc5f3757c07b08ca045ad833857d53404d636c0e16efc9e3d864d59ffd",
+    "audio_from_ids":
+        "0636dc1382515d382dfbc7d88f7e695abfdfa0731c015513e3fe3f8f6f81db5b",
+    "audio_sample_stats":
+        "d2412b2d3cbd66f99a8cc6b3757faead89b8e9257ba4e5d64751c98c954fdacb",
+    "extract_audio_features":
+        "bba4de83b77ff374ab09a890715daa92114d494dae8d54303d92294566f51458",
+    "extract_audio_features_synthetic_False":
+        "77739f14d945a29dddec55bdf686067f78e1ca81d74f7d92667a19f5ddc7eeba",
+    "extract_audio_features_synthetic_True":
+        "8568a2b38c5455ecfb2b49bf3ff8ef76cb2a2e68139ec5e2ab4ab91c1a94aef0",
+    "extract_image_features":
+        "dcba5ce601cf420697c9f8f72ba1cb365e68601ef6e4f382d1953605557c6eda",
+    "extract_image_features_synthetic_False":
+        "85ae6f71bd4d63d06259f5753f057b0b718710b13117e81d3fc4a7a93299f5e4",
+    "extract_image_features_synthetic_True":
+        "4e477ebfc04c47600fd3ac9c452dc15ca9ae26abafecd5ad3faccc1249fcdb8c",
+    "image_ahash":
+        "ed5e21f3c7dc462fe25dfcef69d309d9938698eb0968e998002b5bbc7dfff2f2",
+    "image_pixel_stats":
+        "e033bda53af94bcfc08b34dde15baca72dd96455fe6314fd6d73a5a4cc0da4f8",
+    "media_from_ids":
+        "688d32a11b58631e9e159e5d8d444f1a0386b4862ab7d5515d2cd7cfe969b857",
+    "noise_media_from_ids":
+        "6233aeb5f51429ad1594a5b1fe7be5427d006286e8b40543d4d1fe8f5af9bc16",
+    "probe_media_meta":
+        "5ca4d545ee915f2effe829d9f1de54160906ef6a69c386bfd6ecd74ee24668d9",
+    "video_frame_stats":
+        "02ee18e7e8e09492e696c80d57bed8dc3afc4162150087e42b51d1886ad5819c",
+    "video_from_ids":
+        "8d630c029682292f304ab4f831090157631741ddaedb9cec89c99819105a7696",
+    "video_probe_meta":
+        "82cd2e5b2c09c416f86d09669af166104510457fe722006e031e05d82384bbe3",
+    "video_signature":
+        "b251432d7960d5f7b442ff5a31994834e4e8d2593d11063d8a603a3325155bb8",
+    "video_signature_4":
+        "9ddc02ad2a6f62927dd0ae52d422b205a09140acba6bb272cc330ef9e2d8d3c3",
+}
+
+
+def test_multimodal_outputs_pinned(spark):
+    """Every multimodal operator's rows, pinned by sha256 of the sorted
+    row reprs (NULL and NaN stay distinct).  The inputs are the four
+    id→blob generators' output (their own rows pinned too), edge blobs
+    (NULL, junk, empty, truncated RIFFs, a bare PNG signature, a PNG
+    smaller than the aHash grid, a WAV shorter than the band count, a
+    stereo WAV, a header-only JPEG) and real and noise
+    ``synthetic_media``.  A rewrite of the Python-worker plumbing must
+    reproduce every digest; an empty input must give an empty frame
+    with the declared schema; strict decoders must raise their
+    messages."""
+    import hashlib
+
+    def digest(df):
+        return digest_rows(df.collect())
+
+    def digest_rows(rows):
+        rows = sorted(repr(tuple(r)) for r in rows)
+        return hashlib.sha256(repr(rows).encode()).hexdigest()
+
+    def ids(n):
+        return spark.range(0, n).withColumnRenamed("id", "media_id")
+
+    generated = {
+        "media_from_ids": multimodal.media_from_ids(ids(120)),
+        "video_from_ids": multimodal.video_from_ids(
+            ids(24), fps_fn=lambda i: 10 + i % 3
+        ),
+        "audio_from_ids": multimodal.audio_from_ids(
+            spark.range(0, 40), id_col="id",
+            extra_chunk_fn=lambda i: b"pad" * (i % 3) or None,
+        ),
+        "noise_media_from_ids": multimodal.noise_media_from_ids(ids(16)),
+    }
+    got = {}
+    rows = []
+    for k, (name, gen) in enumerate(generated.items()):
+        gen_rows = gen.collect()
+        got[name] = digest_rows(gen_rows)
+        rows += [(1000 * k + r.media_id, r.blob) for r in gen_rows]
+    wav = multimodal.encode_wav(8000, 400, pattern="ramp")
+    edge = [
+        None, b"junk", b"", wav[:30], wav[:51], b"\x89PNG\r\n\x1a\n",
+        multimodal.encode_png(4, 4, pattern="gradient"),
+        multimodal.encode_wav(8000, 5, pattern="ramp"),
+        multimodal.encode_wav(8000, 200, channels=2, pattern="ramp"),
+        multimodal.encode_jpeg_header(64, 48),
+    ]
+    rows += [(9000 + j, b) for j, b in enumerate(edge)]
+    blobs = spark.createDataFrame(rows, "media_id long, blob binary")
+    empty = spark.createDataFrame([], "media_id long, blob binary")
+
+    def typed(df, media_type):
+        return df.withColumn("meta", F.struct(F.lit(media_type).alias("media_type")))
+
+    ops = {
+        "probe_media_meta": multimodal.probe_media_meta,
+        "image_pixel_stats": multimodal.image_pixel_stats,
+        "audio_sample_stats": multimodal.audio_sample_stats,
+        "audio_band_fingerprint": multimodal.audio_band_fingerprint,
+        "audio_band_fingerprint_4": lambda m: multimodal.audio_band_fingerprint(
+            m, n_bands=4
+        ),
+        "video_probe_meta": multimodal.video_probe_meta,
+        "video_frame_stats": multimodal.video_frame_stats,
+        "image_ahash": multimodal.image_ahash,
+        "audio_content_signature": multimodal.audio_content_signature,
+        "video_signature": multimodal.video_signature,
+        "video_signature_4": lambda m: multimodal.video_signature(m, grid=4),
+        "extract_image_features": lambda m: multimodal.extract_image_features(
+            typed(m, "image")
+        ),
+        "extract_audio_features": lambda m: multimodal.extract_audio_features(
+            typed(m, "audio"), window_ms=40
+        ),
+    }
+    for name, op in ops.items():
+        got[name] = digest(op(blobs))
+        out = op(empty)
+        assert out.collect() == [], name
+        assert out.schema == op(blobs).schema, name
+    for real in (False, True):
+        media = multimodal.synthetic_media(spark, n=24, real_blobs=real)
+        for op in (
+            multimodal.extract_image_features, multimodal.extract_audio_features
+        ):
+            got[f"{op.__name__}_synthetic_{real}"] = digest(op(media))
+    real = multimodal.synthetic_media(spark, n=24, real_blobs=True)
+    for op in (multimodal.extract_image_features, multimodal.extract_audio_features):
+        assert digest(op(real, strict=True)) == got[f"{op.__name__}_synthetic_True"]
+    noise = multimodal.synthetic_media(spark, n=6)
+    for op, msg in (
+        (multimodal.extract_image_features,
+         "pixel decode implemented for PNG-RGB8 and baseline 4:4:4 JPEG"),
+        (multimodal.extract_audio_features,
+         "sample decode implemented for PCM16 WAV only"),
+    ):
+        with pytest.raises(Exception, match=msg):
+            op(noise, strict=True).collect()
+    assert got == _MULTIMODAL_PINS
 
 
 def test_pack_sequences_shards_scale_with_input(spark):

@@ -11,10 +11,12 @@ codegen compiles, Catalyst phases, task run/CPU/GC time, shuffle and
 source bytes, table loads, and the split of wall time into layers (see
 its module docstring).  A query whose cold time far exceeds its warm
 time is plan- or compile-bound; one whose warm time stays high is
-execution-bound.  ``py4j_calls`` counts the Py4J call commands the
-builder sent while constructing the query, a driver cost that repeats
-exactly from one build to the next.  ``--json`` writes every ledger
-metric.
+execution-bound.  ``py_run_s`` and ``py_start_s`` are the time spent
+running and starting Python workers: the part of a ``mapInPandas`` or
+UDF entry's task time that is Python's own.  ``py4j_calls`` counts the
+Py4J call commands the builder sent while constructing the query, a
+driver cost that repeats exactly from one build to the next.
+``--json`` writes every ledger metric.
 
 Never run it concurrently with other Spark work on the same host.
 """
@@ -45,6 +47,8 @@ COLUMNS = (
     ("cpu_s", "exec.task_cpu_s", 7, 3),
     ("gc_s", "exec.task_gc_s", 6, 3),
     ("gap_s", "sched.driver_gap_s", 6, 3),
+    ("py_run_s", "python.run_s", 8, 3),
+    ("py_start_s", "python.start_s", 10, 3),
     ("in_MB", "sources.input_bytes", 6, 2),
     ("shufW_MB", "shuffle.write_bytes", 8, 2),
 )
