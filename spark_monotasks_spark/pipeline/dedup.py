@@ -116,14 +116,30 @@ def minhash_signatures(
     trips, so building the same expression as ``num_hashes`` Column
     trees takes over ten times the Py4J calls.
     """
-    df = _spread(df)
-    sh = shingles(F.col(text_col), k=shingle_k)
+    sh = _shingle_sets(df, id_col, text_col, shingle_k)
+    return _minhash_of_shingles(sh, num_hashes)
+
+
+def _shingle_sets(
+    df: DataFrame, id_col: str, text_col: str, shingle_k: int
+) -> DataFrame:
+    """The ``(id, sh)`` frame of per-doc shingle sets, over the spread
+    corpus."""
+    return _spread(df).select(
+        F.col(id_col).alias("id"), shingles(F.col(text_col), k=shingle_k).alias("sh")
+    )
+
+
+def _minhash_of_shingles(sh: DataFrame, num_hashes: int) -> DataFrame:
+    """:func:`minhash_signatures` over an ``(id, sh)`` frame of shingle
+    sets, so a caller that needs the shingle sets again builds them
+    once."""
     rng = random.Random(_REHASH_SEED)
     ab = [
         (rng.randrange(1, 1 << 61) | 1, rng.randrange(1, 1 << 61))
         for _ in range(num_hashes)
     ]
-    rows = df.select(F.col(id_col).alias("id"), F.explode_outer(sh).alias("_s"))
+    rows = sh.select("id", F.explode_outer("sh").alias("_s"))
     # xxhash64 ignores NULL inputs (hashes to the seed) — keep NULL
     # shingles NULL so NULL docs get [NULL, ...] signatures
     h0 = F.when(F.col("_s").isNull(), F.lit(None).cast("long")).otherwise(
@@ -176,13 +192,17 @@ def minhash_near_duplicates(
 ) -> DataFrame:
     """MinHash+LSH near-duplicate pairs with exact-Jaccard verification.
 
-    Plan shape: linear signature pass → explode bands (|docs|×bands
-    rows, SMALL — ids + two longs only, never the shingle arrays) →
-    bucket self-join (shuffle on bucket) → distinct candidate id pairs →
-    join the shingle sets back in (two hash joins on id) → exact Jaccard
-    → filter.  Keeping the quadratic join payload to bare ids is the
-    scale lever: at 100 TB the banding shuffle is |docs|×bands×24 bytes
-    instead of carrying every document's shingle set bands× times.
+    Plan shape: shingle the corpus once into a pinned ``(id, sh)`` frame
+    → linear signature pass over it → explode bands (|docs|×bands rows,
+    SMALL — ids + two longs only, never the shingle arrays) → bucket
+    self-join (shuffle on bucket) → distinct candidate id pairs → join
+    the pinned shingle sets back in (two hash joins on id) → exact
+    Jaccard → filter.  Keeping the quadratic join payload to bare ids is
+    the scale lever: at 100 TB the banding shuffle is |docs|×bands×24
+    bytes instead of carrying every document's shingle set bands× times,
+    and the verify joins are bounded by the candidate pairs.  The corpus
+    is scanned once; at scale the shingle pin spills to disk
+    (MEMORY_AND_DISK) rather than re-scanning the text.
     Returns (id_a, id_b, jaccard) with id_a < id_b.
     """
     if num_bands < 1 or num_hashes % num_bands != 0:
@@ -192,15 +212,21 @@ def minhash_near_duplicates(
             "are silently discarded"
         )
     rows_per_band = num_hashes // num_bands
-    # Pin the (id, band, bucket) rows, not the signatures: the rows
-    # feed both sides of the self-join, and a pin on the signatures
-    # would still leave each side to build the bands from them.
-    # Pinned here, the bands are computed once, inside the cache
-    # build, and the pin holds three narrow columns instead of a
-    # num_hashes-long array per doc.  persist() keeps AQE planning
-    # below the pin and costs about half a checkpoint on a cold
+    # Two pins.  The shingle sets feed the signatures and both sides of
+    # the verify join; pinned, the corpus is scanned and shingled once.
+    # The (id, band, bucket) rows feed both sides of the self-join; a
+    # pin on the signatures would still leave each side to build the
+    # bands from them, and the bands pin holds three narrow columns
+    # instead of a num_hashes-long array per doc.  persist() keeps AQE
+    # planning below a pin and costs about half a checkpoint on a cold
     # execution; reliable=True takes a durable checkpoint instead.
-    sigs = minhash_signatures(df, id_col, text_col, shingle_k, num_hashes)
+    # The candidate pairs are not pinned: they have one consumer, and a
+    # pin over the self-join, which AQE may plan as a broadcast join,
+    # would keep the broadcast hash relation alive in the driver for
+    # as long as the cache entry lives.
+    sh = _shingle_sets(df, id_col, text_col, shingle_k)
+    sh = barrier(sh, reliable) if reliable else sh.persist()
+    sigs = _minhash_of_shingles(sh, num_hashes)
     base = sigs.select(
         "id",
         minhash_bands(F.col("sig"), num_bands, rows_per_band).alias("bands"),
@@ -221,40 +247,13 @@ def minhash_near_duplicates(
         .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
         .dropDuplicates(["id_a", "id_b"])
     )
-    # candidate pairs are used twice below (id filter + verification
-    # join); pin so the banding self-join runs exactly once
-    cand = barrier(cand, reliable) if reliable else cand.persist()
-    # shingle sets are computed ONLY for docs that appear in a candidate
-    # pair (semi-join prune): at 100 TB the corpus is scanned once with
-    # an id filter instead of shingling every doc.  No broadcast hint:
-    # healthy banding keeps the candidate-id set tiny and AQE picks a
-    # broadcast semi join from the distinct's runtime size, while a
-    # degenerate corpus (near-identical boilerplate at scale) exceeds
-    # the broadcast threshold and degrades to a shuffle semi join
-    # instead of OOMing the driver.
-    need = (
-        cand.select(F.col("id_a").alias("id"))
-        .unionAll(cand.select(F.col("id_b").alias("id")))
-        .distinct()
-    )
-    shs = (
-        df.join(
-            need,
-            F.col(id_col) == F.col("id"),
-            "left_semi",
-        )
-        .select(
-            F.col(id_col).alias("id"),
-            shingles(F.col(text_col), k=shingle_k).alias("sh"),
-        )
-    )
-    # pin the pruned shingle sets: ``shs`` feeds the verify join twice
-    # (sh_a and sh_b), and without a pin each side re-runs the corpus
-    # scan, the semi prune and the shingle build
-    shs = shs.persist()
+    # No join hints: AQE broadcasts the shingle side from runtime sizes
+    # when it is small, and a degenerate corpus (near-identical
+    # boilerplate at scale) degrades to shuffle joins instead of
+    # running the driver out of memory.
     pairs = cand.join(
-        shs.select(F.col("id").alias("id_a"), F.col("sh").alias("sh_a")), on="id_a"
-    ).join(shs.select(F.col("id").alias("id_b"), F.col("sh").alias("sh_b")), on="id_b")
+        sh.select(F.col("id").alias("id_a"), F.col("sh").alias("sh_a")), on="id_a"
+    ).join(sh.select(F.col("id").alias("id_b"), F.col("sh").alias("sh_b")), on="id_b")
     inter = F.size(F.array_intersect("sh_a", "sh_b"))
     union = F.size(F.array_union("sh_a", "sh_b"))
     jac = inter / F.greatest(union, F.lit(1))
@@ -1571,7 +1570,9 @@ def simhash_signatures_portable(
     order costlier, so it exists for external verification (the DuckDB
     oracle, a second pipeline) and cross-system signature joins, not
     for the 100 TB hot path.  Same ZERO-shuffle shape — one narrow
-    projection, 32 ``size(filter(...))`` counts with literal masks."""
+    projection, 32 ``size(filter(...))`` counts with literal masks,
+    written as ONE ``F.expr`` string as in :func:`simhash_signatures`.
+    NULL text gives a NULL signature."""
     hs = F.transform(
         F.split(F.col(text_col), " "),
         lambda t: F.conv(F.substring(F.md5(t.cast("binary")), 1, 8), 16, 10).cast(
@@ -1579,14 +1580,10 @@ def simhash_signatures_portable(
         ),
     ).alias("_hs")
     base = _spread(df).select(F.col(id_col).alias("id"), hs)
-    n = F.size("_hs")
-
-    def bitval(i: int) -> Column:
-        mask = 1 << i
-        ones = F.size(F.filter("_hs", lambda h: h.bitwiseAND(mask) != 0))
-        return F.when(ones * 2 > n, F.lit(mask).cast("bigint")).otherwise(
-            F.lit(0).cast("bigint")
-        )
-
-    sig = sum([bitval(i) for i in range(1, 32)], bitval(0)).alias("sig")
-    return base.select("id", sig)
+    votes = " + ".join(
+        f"CASE WHEN size(filter(_hs, h -> (h & {1 << i}L) != 0)) * 2 > size(_hs) "
+        f"THEN CAST({1 << i}L AS BIGINT) ELSE CAST(0 AS BIGINT) END"
+        for i in range(32)
+    )
+    sig = f"CASE WHEN _hs IS NULL THEN NULL ELSE {votes} END"
+    return base.select("id", F.expr(sig).alias("sig"))

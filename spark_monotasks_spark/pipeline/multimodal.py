@@ -729,13 +729,16 @@ def audio_sample_stats(media: DataFrame) -> DataFrame:
     """Per-clip statistics over REAL decoded PCM16 samples
     (:func:`decode_wav_samples`): mean / RMS / peak of the raw int16
     values (mono mix), rounded for cross-engine parity.  Undecodable
-    blobs yield NULL stats."""
+    blobs yield NULL stats; a valid clip of zero samples has its rate,
+    ``n_samples = 0`` and NULL mean, RMS and peak."""
 
     def stats(b):
         dec = decode_wav_samples(b)
         if dec is None:
             return None
         rate, _ch, samples = dec
+        if samples.shape[0] == 0:
+            return (rate, 0, None, None, None)
         mono = samples.mean(axis=1)
         rms = np.sqrt((mono.astype("float64") ** 2).mean())
         return (

@@ -108,6 +108,16 @@ def test_simhash_null_text_has_no_signature(spark, docs_with_null_text):
     assert [(r.id_a, r.id_b) for r in pairs] == [(100, 101)]
 
 
+def test_simhash_portable_null_text_has_no_signature(spark, docs_with_null_text):
+    """The portable SimHash also gives NULL text a NULL signature;
+    without the guard every vote loses (size(NULL) is -1) and all 40
+    NULL-text documents got signature 0."""
+    sigs = dedup.simhash_signatures_portable(docs_with_null_text).collect()
+    sigs = {r.id: r.sig for r in sigs}
+    assert [i for i, s in sigs.items() if s is None] == list(range(40))
+    assert sigs[100] is not None and sigs[101] is not None
+
+
 def test_minhash_bands_of_null_signature_are_null(spark, docs_with_null_text):
     """A NULL signature, or one of NULL hashes (NULL text at k >= 2),
     has no LSH bands, so NULL-text documents never enter the banding
@@ -164,7 +174,11 @@ def test_signature_builders_make_few_py4j_calls(spark, docs_with_dups):
     string; the count after the first build repeats exactly."""
     from tools.trace_query import count_py4j_calls
 
-    for build in (dedup.minhash_signatures, dedup.simhash_signatures):
+    for build in (
+        dedup.minhash_signatures,
+        dedup.simhash_signatures,
+        dedup.simhash_signatures_portable,
+    ):
         build(docs_with_dups)
         with count_py4j_calls(spark) as n:
             build(docs_with_dups)
@@ -595,25 +609,35 @@ def test_ivf_probe_bounds_scan(spark, tables):
 
 
 def test_minhash_candidate_broadcast_gate(spark, docs_with_dups):
-    """r7 verdict ask #4, closed in r8 via its "drop the hint" option:
-    no FORCED broadcast of the candidate-id prune set anywhere in the
-    plan (a degenerate corpus therefore degrades to a shuffle semi
-    join instead of a driver OOM), while in the healthy case AQE still
-    picks a broadcast semi join from the distinct's real runtime
-    size."""
-    out = dedup.minhash_near_duplicates(docs_with_dups, shingle_k=2)
-    # no unconditional hint anywhere in the analyzed plan
-    assert "ResolvedHint" not in out._jdf.queryExecution().analyzed().toString()
-    # healthy case: the tiny candidate-id set still broadcasts —
-    # chosen from stats, not forced.  collect() first: the FINAL
-    # adaptive plan only exists after execution.
-    rows = sorted((r.id_a, r.id_b, r.jaccard) for r in out.collect())
+    """No FORCED broadcast anywhere in the plan, so a degenerate corpus
+    degrades to shuffle joins instead of running the driver out of
+    memory.  The corpus is shingled once into one pin, which the
+    signatures and both verify joins read, and the run leaves exactly
+    two pins (shingle sets and bands).  No pin it leaves holds a
+    broadcast exchange: a cached plan keeps its broadcast hash relation
+    (a 64 MiB page on a local session) alive in the driver for as long
+    as the cache entry lives."""
+    from tools.trace_query import holds_broadcast, new_pins, physical_nodes
+
+    # a frame of its own: the CacheManager reuses the entries of an equal
+    # plan that an earlier test pinned, and then adds none
+    docs = spark.createDataFrame(docs_with_dups.collect(), docs_with_dups.schema)
+    with new_pins(spark) as pins:
+        out = dedup.minhash_near_duplicates(docs, shingle_k=2)
+        # no unconditional hint anywhere in the analyzed plan
+        assert "ResolvedHint" not in out._jdf.queryExecution().analyzed().toString()
+        # collect() first: the FINAL adaptive plans only exist after execution
+        rows = sorted((r.id_a, r.id_b, r.jaccard) for r in out.collect())
     assert rows  # non-degenerate
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert any(
-        "BroadcastHashJoin" in ln and "LeftSemi" in ln
-        for ln in plan.splitlines()
-    ), plan
+    assert len(pins) == 2, len(pins)
+    scans = [
+        name
+        for fragment in (out._jdf.queryExecution().executedPlan(), *pins)
+        for name in (n.getClass().getSimpleName() for n in physical_nodes(fragment))
+        if name.endswith("ScanExec") and name != "InMemoryTableScanExec"
+    ]
+    assert len(scans) == 1, scans
+    assert not any(map(holds_broadcast, pins)), [p.toString() for p in pins]
 
 
 def test_dedup_param_guards(spark, docs_with_dups):
@@ -2174,6 +2198,20 @@ def test_bpe_apply_merges_hand_example(spark):
     assert (out[2].n_words, out[2].n_tokens) == (2, 2)
     with pytest.raises(ValueError):
         text.bpe_apply_merges(df, [])
+
+
+def test_audio_sample_stats_of_zero_sample_wav(spark):
+    """A valid PCM16 WAV with no samples has its rate, zero samples and
+    NULL mean, RMS and peak; the peak of an empty array used to raise
+    and fail the whole task."""
+    media = spark.createDataFrame(
+        [(1, bytearray(multimodal.encode_wav(8000, 0))),
+         (2, bytearray(multimodal.encode_wav(8000, 5, pattern="ramp")))],
+        "media_id long, blob binary",
+    )
+    got = {r.media_id: tuple(r)[1:] for r in multimodal.audio_sample_stats(media).collect()}
+    assert got[1] == (8000, 0, None, None, None)
+    assert got[2][:2] == (8000, 5) and got[2][4] is not None
 
 
 def test_simhash_portable_near_dup_hamming(spark):

@@ -15,8 +15,15 @@ execution-bound.  ``py_run_s`` and ``py_start_s`` are the time spent
 running and starting Python workers: the part of a ``mapInPandas`` or
 UDF entry's task time that is Python's own.  ``py4j_calls`` counts the
 Py4J call commands the builder sent while constructing the query, a
-driver cost that repeats exactly from one build to the next.
-``--json`` writes every ledger metric.
+driver cost that repeats exactly from one build to the next.  ``pins``
+counts the CacheManager entries the entry added (``persist``/``cache``;
+deterministic, unlike ``getPersistentRDDs()``), and ``pin_bcast`` how
+many of those cached plans hold a broadcast exchange: on a local
+session such a pin keeps the broadcast hash relation (one 64 MiB page
+for a multi-column or string key) in the driver for as long as the
+entry lives.  A warm pass reuses the
+cold pass's entries, so its pins read 0.  ``--json`` writes every
+ledger metric.
 
 Never run it concurrently with other Spark work on the same host.
 """
@@ -51,6 +58,8 @@ COLUMNS = (
     ("py_start_s", "python.start_s", 10, 3),
     ("in_MB", "sources.input_bytes", 6, 2),
     ("shufW_MB", "shuffle.write_bytes", 8, 2),
+    ("pins", "cache.pins", 4, 0),
+    ("pin_bcast", "cache.pin_bcast", 9, 0),
 )
 
 
@@ -76,6 +85,51 @@ def count_py4j_calls(spark):
         yield count
     finally:
         client.send_command = send
+
+
+def physical_nodes(plan):
+    """Every node of a physical plan (a Py4J ``SparkPlan``), through the
+    adaptive wrappers and query stages, stopping at in-memory scans: a
+    pin's own plan is a separate fragment."""
+    yield plan
+    name = plan.getClass().getSimpleName()
+    if name == "InMemoryTableScanExec":
+        return
+    if name == "AdaptiveSparkPlanExec":
+        kids = [plan.executedPlan()]
+    elif name.endswith("QueryStageExec"):
+        kids = [plan.plan()]
+    else:
+        ch = plan.children()
+        kids = [ch.apply(i) for i in range(ch.size())]
+    for k in kids:
+        yield from physical_nodes(k)
+
+
+def holds_broadcast(plan) -> bool:
+    return any(
+        n.getClass().getSimpleName() == "BroadcastExchangeExec"
+        for n in physical_nodes(plan)
+    )
+
+
+@contextlib.contextmanager
+def new_pins(spark):
+    """Yield a list that, once the block ends, holds the cached physical
+    plans of the CacheManager entries the block added, newest first.
+    Read them after the entry has run: an adaptive plan is final only
+    then."""
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    before = cache.cachedData().size()
+    pins: list = []
+    try:
+        yield pins
+    finally:
+        cached = cache.cachedData()
+        pins.extend(
+            cached.apply(i).cachedRepresentation().cacheBuilder().cachedPlan()
+            for i in range(cached.size() - before)
+        )
 
 
 def _row(name: str, metrics: dict) -> str:
@@ -114,21 +168,26 @@ def main() -> None:
     passes = {}
     try:
         for pass_name in ("cold", "warm"):
-            calls = {}
+            extra = {}
             for name in args.names:
                 q = ledger.begin(pass_name, name)
-                sc.setJobGroup(f"{pass_name}/{name}/build", name)
-                with count_py4j_calls(spark) as n:
-                    df = QUERY_REGISTRY[name](spark, args.sf)
-                calls[name] = n[0]
-                ledger.sink(q)
-                sc.setJobGroup(f"{pass_name}/{name}/sink", name)
-                df.write.format("noop").mode("overwrite").save()
-                ledger.end(q)
+                with new_pins(spark) as pins:
+                    sc.setJobGroup(f"{pass_name}/{name}/build", name)
+                    with count_py4j_calls(spark) as n:
+                        df = QUERY_REGISTRY[name](spark, args.sf)
+                    ledger.sink(q)
+                    sc.setJobGroup(f"{pass_name}/{name}/sink", name)
+                    df.write.format("noop").mode("overwrite").save()
+                    ledger.end(q)
+                extra[name] = {
+                    "queries.py4j_calls": n[0],
+                    "cache.pins": len(pins),
+                    "cache.pin_bcast": sum(map(holds_broadcast, pins)),
+                }
             sc._jsc.clearJobGroup()
             passes[pass_name] = ledger.summarize()
             for led in passes[pass_name]:
-                led["metrics"]["queries.py4j_calls"] = calls[led["name"]]
+                led["metrics"].update(extra[led["name"]])
     finally:
         ledger.close()
         spark.stop()
