@@ -23,7 +23,8 @@ memory-only shuffle had exactly this fragility — SURVEY §4.3):
 
 Every iterative operator in this package takes ``reliable: bool``
 and routes through :func:`barrier` — see SCALE.md ("Barrier
-durability") for when to flip it.
+durability") for when to flip it.  A frame that is reused but not
+iterated is pinned with :func:`pin` instead.
 """
 
 from __future__ import annotations
@@ -43,3 +44,19 @@ def barrier(df: DataFrame, reliable: bool = False) -> DataFrame:
             "(HDFS/S3 on a cluster — local disk only fakes durability)"
         )
     return df.checkpoint(eager=True)
+
+
+def pin(df: DataFrame, reliable: bool = False) -> DataFrame:
+    """Keep a multiply-consumed frame for reuse: ``persist()``, or the
+    durable :func:`barrier` when ``reliable``.  ``persist()`` keeps AQE
+    planning below the pin and costs about half a checkpoint on a cold
+    execution; MEMORY_AND_DISK spills rather than failing at scale.
+
+    A persisted pin lives until ``unpersist()``: the CacheManager entry
+    holds it, so the ContextCleaner does not reap it when the caller
+    drops the plan.  If the pinned plan holds a broadcast exchange, the
+    entry also keeps that broadcast's hash relation in the driver (one
+    ``spark.buffer.pageSize`` page, 64 MiB with an 8g driver, for a
+    string or multi-column key).  Pin only a frame with more than one
+    consumer."""
+    return barrier(df, reliable) if reliable else df.persist()

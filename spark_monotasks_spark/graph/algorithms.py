@@ -27,7 +27,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from spark_monotasks_spark.barrier import barrier
+from spark_monotasks_spark.barrier import barrier, pin
 from spark_monotasks_spark.operators.localdata import local_rows_df
 
 
@@ -469,13 +469,7 @@ def connected_components_star(
         # LocalRelation (no Python-worker tasks, broadcast without a
         # job); bigger maps fall back to a row-count-sized parallelize
         mp = local_rows_df(spark, mapping, mp_schema)
-        return (
-            verts.join(F.broadcast(mp), on="id", how="left")
-            .select(
-                "id",
-                F.coalesce("component", F.col("id")).alias("component"),
-            )
-        )
+        return _component_labels(verts, F.broadcast(mp), "component")
 
     for _ in range(max_iters):
         sym = _sym(e)
@@ -542,17 +536,23 @@ def connected_components_star(
             roots = e.groupBy(F.col("v").alias("id")).agg(
                 F.min("u").alias("component")
             )
-            return (
-                verts.join(roots, on="id", how="left")
-                .select(
-                    "id",
-                    F.coalesce("component", F.col("id")).alias("component"),
-                )
-            )
+            return _component_labels(verts, roots, "component")
     raise RuntimeError(
         f"connected_components_star did not converge within {max_iters} "
         "rounds — raise max_iters (expected O(log n); this indicates a "
         "pathological input or a bug, not a deep graph)"
+    )
+
+
+def _component_labels(
+    ids: DataFrame, comps: DataFrame, label: str = "cluster"
+) -> DataFrame:
+    """``(id, label)`` for every row of the one-column ``(id)`` frame
+    ``ids``: its ``component`` in ``comps`` (an ``(id, component)``
+    frame such as :func:`connected_components_star`'s), or its own id
+    when no edge reached it, so singletons label themselves."""
+    return ids.join(comps, on="id", how="left").select(
+        "id", F.coalesce("component", F.col("id")).alias(label)
     )
 
 
@@ -791,9 +791,6 @@ def k_core(
     # states unpersist as soon as the next is materialized, so at most
     # two round-states hold executor storage at any time.
     # reliable=True keeps the durable per-round checkpoint.
-    def _pin(df: DataFrame) -> DataFrame:
-        return barrier(df, reliable) if reliable else df.persist()
-
     # sym_dedup=False is a caller PRECONDITION claim: the input is
     # already distinct AND no edge's reverse is present (e.g. a
     # bipartite graph whose two id domains are disjoint by
@@ -812,7 +809,7 @@ def k_core(
     # needs and one vertex-sized probe per round.
     if sym_dedup:
         sym = sym.distinct()
-        cur = _pin(sym)
+        cur = pin(sym, reliable)
         pin0 = cur
     else:
         # r8: the same precondition means the HALF-SIZE directed edge
@@ -824,7 +821,7 @@ def k_core(
         # rows instead of 2|E| and the upstream exchange feeding it is
         # read once, not twice.  (On the sym_dedup path the dedup runs
         # on the 2|E| union, so its output must be what's pinned.)
-        e = _pin(edges.select("src", "dst"))
+        e = pin(edges.select("src", "dst"), reliable)
         cur = e.union(
             e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
         )
@@ -902,10 +899,11 @@ def k_core(
                 F.col("src").alias("id"), F.col("deg").alias("core_deg")
             )
         keep = deg.filter(F.col("deg") >= k).select("src")
-        nxt = _pin(
+        nxt = pin(
             cur.join(keep, on="src", how="left_semi").join(
                 keep.withColumnRenamed("src", "dst"), on="dst", how="left_semi"
-            )
+            ),
+            reliable,
         )
         prev_pin, prev_deg, cur, cur_pin = cur_pin, deg, nxt, nxt
     raise RuntimeError(

@@ -21,10 +21,14 @@ from __future__ import annotations
 import random
 import re
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from spark_monotasks_spark.barrier import barrier
+from spark_monotasks_spark.barrier import pin
+from spark_monotasks_spark.graph.algorithms import (
+    _component_labels,
+    connected_components_star,
+)
 
 #: seed for the MinHash affine rehash family — fixed so signatures are
 #: deterministic across runs/sessions (a near-dup index built yesterday
@@ -33,6 +37,7 @@ _REHASH_SEED = 42
 
 
 from spark_monotasks_spark.partitioning import spread_to_cluster as _spread
+from spark_monotasks_spark.pipeline.text import _rewrite_without
 from spark_monotasks_spark.pipeline.text import ngram_fold as _ngram_fold
 
 
@@ -121,13 +126,25 @@ def minhash_signatures(
 
 
 def _shingle_sets(
-    df: DataFrame, id_col: str, text_col: str, shingle_k: int
+    df: DataFrame, id_col: str, text_col: str, shingle_k: int, *extra: Column
 ) -> DataFrame:
-    """The ``(id, sh)`` frame of per-doc shingle sets, over the spread
-    corpus."""
+    """The ``(id, *extra, sh)`` frame of per-doc shingle sets: the one
+    place a shingle set is built.  The shingle build (split, slice and
+    distinct per doc) is the CPU-heavy front of every MinHash and
+    blocked-pair pass, so it runs over the spread corpus: a one-split
+    scan would otherwise run it in one task."""
     return _spread(df).select(
-        F.col(id_col).alias("id"), shingles(F.col(text_col), k=shingle_k).alias("sh")
+        F.col(id_col).alias("id"),
+        *extra,
+        shingles(F.col(text_col), k=shingle_k).alias("sh"),
     )
+
+
+def _jaccard(a: str, b: str) -> Column:
+    """Set Jaccard of two array columns, rounded to 4 places."""
+    inter = F.size(F.array_intersect(a, b))
+    union = F.size(F.array_union(a, b))
+    return F.round(inter / F.greatest(union, F.lit(1)), 4)
 
 
 def _minhash_of_shingles(sh: DataFrame, num_hashes: int) -> DataFrame:
@@ -217,24 +234,23 @@ def minhash_near_duplicates(
     # The (id, band, bucket) rows feed both sides of the self-join; a
     # pin on the signatures would still leave each side to build the
     # bands from them, and the bands pin holds three narrow columns
-    # instead of a num_hashes-long array per doc.  persist() keeps AQE
-    # planning below a pin and costs about half a checkpoint on a cold
-    # execution; reliable=True takes a durable checkpoint instead.
+    # instead of a num_hashes-long array per doc.
     # The candidate pairs are not pinned: they have one consumer, and a
     # pin over the self-join, which AQE may plan as a broadcast join,
-    # would keep the broadcast hash relation alive in the driver for
-    # as long as the cache entry lives.
-    sh = _shingle_sets(df, id_col, text_col, shingle_k)
-    sh = barrier(sh, reliable) if reliable else sh.persist()
+    # would keep the broadcast hash relation alive in the driver (see
+    # barrier.pin).
+    sh = pin(_shingle_sets(df, id_col, text_col, shingle_k), reliable)
     sigs = _minhash_of_shingles(sh, num_hashes)
     base = sigs.select(
         "id",
         minhash_bands(F.col("sig"), num_bands, rows_per_band).alias("bands"),
     )
-    banded = base.select("id", F.explode("bands").alias("bb")).select(
-        "id", F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket")
+    banded = pin(
+        base.select("id", F.explode("bands").alias("bb")).select(
+            "id", F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket")
+        ),
+        reliable,
     )
-    banded = barrier(banded, reliable) if reliable else banded.persist()
     a = banded.alias("a")
     b = banded.alias("b")
     cand = (
@@ -254,13 +270,9 @@ def minhash_near_duplicates(
     pairs = cand.join(
         sh.select(F.col("id").alias("id_a"), F.col("sh").alias("sh_a")), on="id_a"
     ).join(sh.select(F.col("id").alias("id_b"), F.col("sh").alias("sh_b")), on="id_b")
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    union = F.size(F.array_union("sh_a", "sh_b"))
-    jac = inter / F.greatest(union, F.lit(1))
-    return (
-        pairs.select("id_a", "id_b", F.round(jac, 4).alias("jaccard"))
-        .filter(F.col("jaccard") >= jaccard_threshold)
-    )
+    return pairs.select(
+        "id_a", "id_b", _jaccard("sh_a", "sh_b").alias("jaccard")
+    ).filter(F.col("jaccard") >= jaccard_threshold)
 
 
 # ---------------------------------------------------------------------------
@@ -339,9 +351,7 @@ def simhash_near_duplicates(
     # pin Catalyst's projection collapse would substitute the 64-filter
     # expression into every band chunk and both self-join sides; id +
     # one bigint per doc is cheaper than any shuffle of the same rows.
-    # persist() for the same cold-cost reason as minhash_near_duplicates
-    _sigs = simhash_signatures(df, id_col, text_col)
-    base = barrier(_sigs, reliable) if reliable else _sigs.persist()
+    base = pin(simhash_signatures(df, id_col, text_col), reliable)
     banded = base.select(
         "id",
         "sig",
@@ -401,31 +411,46 @@ def ngram_jaccard_pairs(
     ``allow_unblocked=True`` (tiny/test inputs only) — the API must not
     silently plan O(n²), same contract as fuzzy_pairs_levenshtein.
     """
+    pairs = _blocked_shingle_pairs(
+        "ngram_jaccard_pairs", df, id_col, text_col, block_col, n, allow_unblocked
+    )
+    return pairs.select(
+        "id_a", "id_b", _jaccard("sh_a", "sh_b").alias("jaccard")
+    ).filter(F.col("jaccard") >= threshold)
+
+
+def _blocked_shingle_pairs(
+    op: str,
+    df: DataFrame,
+    id_col: str,
+    text_col: str,
+    block_col: str | None,
+    n: int,
+    allow_unblocked: bool,
+) -> DataFrame:
+    """``(id_a, id_b, sh_a, sh_b)``: every pair of docs with
+    ``id_a < id_b`` in one ``block_col`` block, with their n-shingle
+    sets.  Refuses the unblocked all-pairs plan unless the caller
+    ``op`` opted in with ``allow_unblocked``.  One shuffle on the block
+    key; the shingle sets ride once per side."""
     if block_col is None and not allow_unblocked:
         raise ValueError(
-            "ngram_jaccard_pairs requires a bounded blocking column; an "
+            f"{op} requires a bounded blocking column; an "
             "unblocked self-join is all-pairs O(n^2).  Pass a "
             "content-derived block_col (e.g. a 1-band MinHash bucket), or "
             "allow_unblocked=True for small/test inputs only"
         )
-    sh = shingles(F.col(text_col), k=n)
     blk = F.col(block_col) if block_col else F.lit(0)
-    base = df.select(F.col(id_col).alias("id"), blk.alias("blk"), sh.alias("sh"))
+    base = _shingle_sets(df, id_col, text_col, n, blk.alias("blk"))
     a = base.alias("a")
     b = base.alias("b")
-    pairs = a.join(
+    return a.join(
         b, on=(F.col("a.blk") == F.col("b.blk")) & (F.col("a.id") < F.col("b.id"))
-    )
-    inter = F.size(F.array_intersect(F.col("a.sh"), F.col("b.sh")))
-    union = F.size(F.array_union(F.col("a.sh"), F.col("b.sh")))
-    jac = inter / F.greatest(union, F.lit(1))
-    return (
-        pairs.select(
-            F.col("a.id").alias("id_a"),
-            F.col("b.id").alias("id_b"),
-            F.round(jac, 4).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= threshold)
+    ).select(
+        F.col("a.id").alias("id_a"),
+        F.col("b.id").alias("id_b"),
+        F.col("a.sh").alias("sh_a"),
+        F.col("b.sh").alias("sh_b"),
     )
 
 
@@ -451,30 +476,17 @@ def containment_pairs(
     ``block_col`` blocks (content-derived — e.g. a 1-band MinHash
     bucket, whose recall for containment C is ≈ C when the min shingle
     of the contained side also appears in the container), and an
-    unblocked call raises.  One shuffle on the block key; shingle sets
-    ride once per side."""
-    if block_col is None and not allow_unblocked:
-        raise ValueError(
-            "containment_pairs requires a bounded blocking column; an "
-            "unblocked self-join is all-pairs O(n^2).  Pass a "
-            "content-derived block_col (e.g. a 1-band MinHash bucket), or "
-            "allow_unblocked=True for small/test inputs only"
-        )
-    sh = shingles(F.col(text_col), k=n)
-    blk = F.col(block_col) if block_col else F.lit(0)
-    base = df.select(F.col(id_col).alias("id"), blk.alias("blk"), sh.alias("sh"))
-    a = base.alias("a")
-    b = base.alias("b")
-    pairs = a.join(
-        b, on=(F.col("a.blk") == F.col("b.blk")) & (F.col("a.id") < F.col("b.id"))
+    unblocked call raises (:func:`_blocked_shingle_pairs`)."""
+    pairs = _blocked_shingle_pairs(
+        "containment_pairs", df, id_col, text_col, block_col, n, allow_unblocked
     )
-    inter = F.size(F.array_intersect(F.col("a.sh"), F.col("b.sh")))
-    c_a_in_b = inter / F.greatest(F.size(F.col("a.sh")), F.lit(1))
-    c_b_in_a = inter / F.greatest(F.size(F.col("b.sh")), F.lit(1))
+    inter = F.size(F.array_intersect("sh_a", "sh_b"))
+    c_a_in_b = inter / F.greatest(F.size("sh_a"), F.lit(1))
+    c_b_in_a = inter / F.greatest(F.size("sh_b"), F.lit(1))
     return (
         pairs.select(
-            F.col("a.id").alias("id_a"),
-            F.col("b.id").alias("id_b"),
+            "id_a",
+            "id_b",
             F.round(c_a_in_b, 4).alias("containment_a_in_b"),
             F.round(c_b_in_a, 4).alias("containment_b_in_a"),
         )
@@ -512,8 +524,6 @@ def near_duplicate_clusters(
     extra left join at the end to give singletons their own cluster id.
     Returns (id, cluster) where cluster = min doc id in the component.
     """
-    from spark_monotasks_spark.graph.algorithms import connected_components_star
-
     pairs = minhash_near_duplicates(
         df, id_col, text_col, shingle_k, num_hashes, num_bands,
         jaccard_threshold, reliable=reliable,
@@ -523,11 +533,7 @@ def near_duplicate_clusters(
     # (a near-dup chain A~B~C~... is exactly the high-diameter shape
     # min-label propagation is worst at); same (id, min-id) labels
     comps = connected_components_star(edges, reliable=reliable)
-    return (
-        df.select(F.col(id_col).alias("id"))
-        .join(comps, on="id", how="left")
-        .select("id", F.coalesce("component", F.col("id")).alias("cluster"))
-    )
+    return _component_labels(df.select(F.col(id_col).alias("id")), comps)
 
 
 def drop_near_duplicates(
@@ -609,32 +615,10 @@ def duplicate_segment_positions(
     collect_list+array_sort+slice aggregation in place of the rank
     window (~1.13× slower — the hash agg's per-group array builds cost
     more than the partition sort they avoid)."""
-    from pyspark.sql import Window
-
-    occ = df.select(
-        F.col(id_col).alias("id"),
-        F.posexplode(segments(F.col(text_col), seg_tokens, sep)).alias("pos", "seg"),
-    )
-    if fingerprint == "md5":
-        occ = occ.select(
-            "id", "pos", F.unhex(F.md5(F.col("seg").cast("binary"))).alias("fp1")
+    return _non_first(
+        *_unit_fingerprints(
+            df, id_col, text_col, seg_tokens, sep, fingerprint, sliding=False
         )
-        fp_cols = ["fp1"]
-    elif fingerprint == "xxhash128":
-        occ = occ.select(
-            "id",
-            "pos",
-            F.xxhash64("seg", F.lit(1)).alias("fp1"),
-            F.xxhash64("seg", F.lit(2)).alias("fp2"),
-        )
-        fp_cols = ["fp1", "fp2"]
-    else:
-        raise ValueError(f"unknown fingerprint {fingerprint!r}")
-    w = Window.partitionBy(*fp_cols).orderBy("id", "pos")
-    return (
-        occ.select("id", "pos", F.row_number().over(w).alias("rn"))
-        .filter(F.col("rn") > 1)
-        .select("id", "pos")
     )
 
 
@@ -653,18 +637,8 @@ def drop_duplicate_segments(
     beyond-reference brief item.  Scale shape: shuffle #1 groups 28-byte
     (fp,id,pos) keys; shuffle #2 ships the drop-position SETS (tiny —
     only docs that lose segments have one) back to the doc partition;
-    the corpus text itself is never shuffled, the rebuild is a map-side
-    array filter.
-
-    Untouched documents (no drop set — NULL after the left join) pass
-    their text through VERBATIM: the CASE branch skips the whole
-    rebuild expression chain for them (higher-order lambdas are
-    interpreted per element, so this is the expensive part), measured
-    ~10% faster end-to-end at sf0.1 where 40% of docs are untouched —
-    and the fraction only grows after upstream exact dedup at 100 TB.
-    For sep-canonical text (single separators, no leading/trailing —
-    what the tokenize step upstream guarantees) verbatim == re-joined,
-    asserted over random corpora in tests/test_merge_properties.py.
+    the corpus text itself is never shuffled (:func:`_rewrite_without`;
+    untouched documents keep their text verbatim).
 
     The rebuild itself is TOKEN-level: dropping segment p is exactly
     dropping the tokens with index div seg_tokens == p, so one filter
@@ -679,24 +653,8 @@ def drop_duplicate_segments(
         .agg(F.collect_set("pos").alias("_drop_pos"))
         .withColumnRenamed("id", id_col)
     )
-    toks = F.split(F.col(text_col), re.escape(sep))
-    kept = F.filter(
-        toks,
-        lambda tok, i: ~F.coalesce(
-            F.array_contains(
-                F.col("_drop_pos"), F.floor(i / seg_tokens).cast("int")
-            ),
-            F.lit(False),
-        ),
-    )
-    rebuilt = F.concat_ws(sep, kept)
-    return (
-        df.join(drops, on=id_col, how="left")
-        .withColumn(
-            "text_dedup",
-            F.when(F.col("_drop_pos").isNull(), F.col(text_col)).otherwise(rebuilt),
-        )
-        .drop("_drop_pos")
+    return _rewrite_without(
+        df, drops, id_col, text_col, "text_dedup", sep, unit=seg_tokens
     )
 
 
@@ -755,9 +713,11 @@ def jaccard_join_prefix(
     # pins; an eager localCheckpoint measured ~2x WORSE than no pin —
     # it forfeits AQE coalescing and broadcast planning below the cut).
     # MEMORY_AND_DISK (persist default) spills rather than OOMs at
-    # scale, and the blocks are reaped by the ContextCleaner as soon as
-    # the caller drops the returned plan — the cache dies with the
-    # query, no explicit unpersist needed.
+    # scale.  The pins live until unpersist (see barrier.pin): the
+    # CacheManager entry holds them, so the ContextCleaner does not
+    # reap them when the caller drops the returned plan, and AQE
+    # broadcasts occ ⋈ freq below ``prefixes``, so that pin also keeps
+    # the broadcast hash relation in the driver.
     # _spread: the shingle build (split + slice + distinct per doc) is
     # the CPU-heavy front of all three consumers — never leave it on a
     # one-split local scan (r8; no-op on wide scans)
@@ -836,75 +796,85 @@ def jaccard_join_prefix(
 # exact-substring (maximal duplicated span) dedup — Lee et al. 2022 shape
 # ---------------------------------------------------------------------------
 
-def _gram_occurrences(
+def _unit_fingerprints(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    k: int,
+    width: int,
     sep: str,
     fingerprint: str,
+    sliding: bool,
 ) -> tuple[DataFrame, list[str]]:
-    """(id, pos, fp...) stream of every OVERLAPPING k-token gram — the
-    shared front half of span dedup and span decontamination.  Grams
-    are built and hashed map-side; downstream shuffles carry (fp, id,
-    pos) only, never text.  Returns the frame plus the fingerprint
-    column names (1 for md5, 2 for the xxhash128 pair)."""
-    toks = F.split(F.col(text_col), re.escape(sep))
-    n = F.size(toks)
-    grams = F.transform(
-        F.sequence(F.lit(0), (n - k).cast("int")),
-        lambda i: F.concat_ws(sep, F.slice(toks, i + 1, k)),
-    )
-    # _spread (r8): the gram posexplode multiplies each doc into
-    # ~|tokens| rows and hashes every one — with a single-file local
-    # scan (one split) the whole pass pins to ONE task.  One cheap
-    # round-robin shuffle of the compact source rows unlocks full
-    # parallelism; no-op when the scan is already wide (the 100 TB
-    # case).
-    occ = _spread(df.filter(n >= k)).select(
-        F.col(id_col).alias("id"),
-        F.posexplode(grams).alias("pos", "gram"),
+    """(id, pos, fp...) of every ``width``-token unit of every doc — the
+    shared front of segment dedup, span dedup and span decontamination.
+    ``sliding`` picks OVERLAPPING grams (one per token offset; docs
+    shorter than one gram have none), else :func:`segments`' aligned
+    blocks.  Units are built and hashed map-side; downstream shuffles
+    carry (fp, id, pos) only, never text.  Returns the frame plus the
+    fingerprint column names: the seeded xxhash64 pair for
+    ``"xxhash128"``, the raw digest for ``"md5"`` (the choice is
+    described at :func:`duplicate_segment_positions`)."""
+    if width < 1:
+        raise ValueError(f"the unit width must be at least 1 token, got {width}")
+    if sliding:
+        toks = F.split(F.col(text_col), re.escape(sep))
+        n = F.size(toks)
+        units = F.transform(
+            F.sequence(F.lit(0), (n - width).cast("int")),
+            lambda i: F.concat_ws(sep, F.slice(toks, i + 1, width)),
+        )
+        # _spread (r8): the gram posexplode multiplies each doc into
+        # ~|tokens| rows and hashes every one — with a single-file local
+        # scan (one split) the whole pass pins to ONE task
+        df = _spread(df.filter(n >= width))
+    else:
+        units = segments(F.col(text_col), width, sep)
+    occ = df.select(
+        F.col(id_col).alias("id"), F.posexplode(units).alias("pos", "unit")
     )
     if fingerprint == "md5":
-        occ = occ.select(
-            "id", "pos", F.unhex(F.md5(F.col("gram").cast("binary"))).alias("fp1")
-        )
-        fp_cols = ["fp1"]
+        fps = [F.unhex(F.md5(F.col("unit").cast("binary"))).alias("fp1")]
     elif fingerprint == "xxhash128":
-        occ = occ.select(
-            "id",
-            "pos",
-            F.xxhash64("gram", F.lit(1)).alias("fp1"),
-            F.xxhash64("gram", F.lit(2)).alias("fp2"),
-        )
-        fp_cols = ["fp1", "fp2"]
+        fps = [
+            F.xxhash64("unit", F.lit(1)).alias("fp1"),
+            F.xxhash64("unit", F.lit(2)).alias("fp2"),
+        ]
     else:
         raise ValueError(f"unknown fingerprint {fingerprint!r}")
-    return occ, fp_cols
+    return occ.select("id", "pos", *fps), [f"fp{i + 1}" for i in range(len(fps))]
 
 
-def _duplicate_gram_positions(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    k: int,
-    sep: str,
-    fingerprint: str,
-) -> DataFrame:
-    """(id, pos) of every NON-FIRST occurrence of each OVERLAPPING
-    k-token gram corpus-wide (first = min (id, pos)).  The sliding
-    window — unlike :func:`segments`' aligned blocks — is what lets
-    span dedup find duplicated runs at ANY offset.  Same 100 TB shape
-    as :func:`duplicate_segment_positions`: grams are built and hashed
-    map-side, the shuffle carries (fp, id, pos) only, never text."""
-    from pyspark.sql import Window
-
-    occ, fp_cols = _gram_occurrences(df, id_col, text_col, k, sep, fingerprint)
+def _non_first(occ: DataFrame, fp_cols: list[str]) -> DataFrame:
+    """(id, pos) of every NON-FIRST occurrence of each fingerprint in
+    ``occ`` (first = min (id, pos)): one rank window partitioned by the
+    fingerprint."""
     w = Window.partitionBy(*fp_cols).orderBy("id", "pos")
     return (
         occ.select("id", "pos", F.row_number().over(w).alias("rn"))
         .filter(F.col("rn") > 1)
         .select("id", "pos")
+    )
+
+
+def _span_islands(marked: DataFrame, k: int) -> DataFrame:
+    """(id, span_start, span_end): the maximal runs covered by the
+    k-grams at the marked (id, pos) rows.  Marked grams at positions
+    p < q of one doc coalesce iff q <= p + k (their covers [p, p+k-1]
+    and [q, q+k-1] touch or overlap) — the classic gaps-and-islands
+    window, computed over the MARKED rows only, partitioned by doc."""
+    w = Window.partitionBy("id").orderBy("pos")
+    prev = F.lag("pos").over(w)
+    flagged = marked.withColumn(
+        "_new", F.when(prev.isNull() | (F.col("pos") > prev + k), 1).otherwise(0)
+    )
+    islands = flagged.withColumn("_isl", F.sum("_new").over(w))
+    return (
+        islands.groupBy("id", "_isl")
+        .agg(
+            F.min("pos").alias("span_start"),
+            (F.max("pos") + (k - 1)).alias("span_end"),
+        )
+        .select("id", "span_start", "span_end")
     )
 
 
@@ -931,31 +901,15 @@ def duplicate_span_positions(
 
     Reference analogy: none (the reference has no corpus-level text
     dedup) — beyond-reference brief item, sibling of the aligned
-    :func:`duplicate_segment_positions`.
-
-    Merge rule: marked grams at positions p, q (p < q, same doc)
-    coalesce iff q <= p + min_tokens (their covers [p, p+k-1] and
-    [q, q+k-1] touch or overlap) — the classic gaps-and-islands
-    window, computed only over the MARKED rows (tiny: duplicated
-    regions only), partitioned by doc."""
-    from pyspark.sql import Window
-
-    k = min_tokens
-    marked = _duplicate_gram_positions(df, id_col, text_col, k, sep, fingerprint)
-    w = Window.partitionBy("id").orderBy("pos")
-    prev = F.lag("pos").over(w)
-    flagged = marked.withColumn(
-        "_new", F.when(prev.isNull() | (F.col("pos") > prev + k), 1).otherwise(0)
-    )
-    islands = flagged.withColumn("_isl", F.sum("_new").over(w))
-    return (
-        islands.groupBy("id", "_isl")
-        .agg(
-            F.min("pos").alias("span_start"),
-            (F.max("pos") + (k - 1)).alias("span_end"),
+    :func:`duplicate_segment_positions`; the sliding window — unlike
+    :func:`segments`' aligned blocks — is what finds duplicated runs at
+    ANY offset.  Runs merge as in :func:`_span_islands`."""
+    marked = _non_first(
+        *_unit_fingerprints(
+            df, id_col, text_col, min_tokens, sep, fingerprint, sliding=True
         )
-        .select("id", "span_start", "span_end")
     )
+    return _span_islands(marked, min_tokens)
 
 
 def drop_duplicate_spans(
@@ -974,7 +928,9 @@ def drop_duplicate_spans(
     VERBATIM; the drop sets shipped back to the doc partition are
     token INDICES — tiny — and the corpus text never shuffles."""
     k = min_tokens
-    marked = _duplicate_gram_positions(df, id_col, text_col, k, sep, fingerprint)
+    marked = _non_first(
+        *_unit_fingerprints(df, id_col, text_col, k, sep, fingerprint, sliding=True)
+    )
     drops = (
         marked.select(
             "id",
@@ -984,22 +940,7 @@ def drop_duplicate_spans(
         .agg(F.collect_set("_ti").alias("_drop_pos"))
         .withColumnRenamed("id", id_col)
     )
-    toks = F.split(F.col(text_col), re.escape(sep))
-    kept = F.filter(
-        toks,
-        lambda tok, i: ~F.coalesce(
-            F.array_contains(F.col("_drop_pos"), i), F.lit(False)
-        ),
-    )
-    rebuilt = F.concat_ws(sep, kept)
-    return (
-        df.join(drops, on=id_col, how="left")
-        .withColumn(
-            "text_dedup",
-            F.when(F.col("_drop_pos").isNull(), F.col(text_col)).otherwise(rebuilt),
-        )
-        .drop("_drop_pos")
-    )
+    return _rewrite_without(df, drops, id_col, text_col, "text_dedup", sep)
 
 
 def contaminated_span_positions(
@@ -1027,30 +968,17 @@ def contaminated_span_positions(
     100 TB the benchmark side is megabytes); the probe is one
     left-semi join of (fp, id, pos) keys; the gaps-and-islands merge
     runs over MARKED rows only, partitioned by doc."""
-    from pyspark.sql import Window
-
     k = min_tokens
-    occ, fp_cols = _gram_occurrences(df, id_col, text_col, k, sep, fingerprint)
-    ref_occ, _ = _gram_occurrences(
-        reference, ref_id_col, ref_text_col, k, sep, fingerprint
+    occ, fp_cols = _unit_fingerprints(
+        df, id_col, text_col, k, sep, fingerprint, sliding=True
+    )
+    ref_occ, _ = _unit_fingerprints(
+        reference, ref_id_col, ref_text_col, k, sep, fingerprint, sliding=True
     )
     marked = occ.join(
         ref_occ.select(*fp_cols).distinct(), on=fp_cols, how="left_semi"
     ).select("id", "pos")
-    w = Window.partitionBy("id").orderBy("pos")
-    prev = F.lag("pos").over(w)
-    flagged = marked.withColumn(
-        "_new", F.when(prev.isNull() | (F.col("pos") > prev + k), 1).otherwise(0)
-    )
-    islands = flagged.withColumn("_isl", F.sum("_new").over(w))
-    return (
-        islands.groupBy("id", "_isl")
-        .agg(
-            F.min("pos").alias("span_start"),
-            (F.max("pos") + (k - 1)).alias("span_end"),
-        )
-        .select("id", "span_start", "span_end")
-    )
+    return _span_islands(marked, k)
 
 
 def scrub_contaminated_spans(
@@ -1089,27 +1017,17 @@ def scrub_contaminated_spans(
         )
         .withColumnRenamed("id", id_col)
     )
-    toks = F.split(F.col(text_col), re.escape(sep))
-    kept = F.filter(
-        toks,
-        lambda tok, i: ~F.coalesce(
-            F.array_contains(F.col("_drop_pos"), i), F.lit(False)
-        ),
-    )
-    rebuilt = F.concat_ws(sep, kept)
-    return (
-        df.join(per, on=id_col, how="left")
-        .withColumn("n_spans", F.coalesce(F.col("n_spans"), F.lit(0)))
-        .withColumn(
-            "tokens_removed", F.coalesce(F.col("tokens_removed"), F.lit(0))
-        )
-        .withColumn(
-            "text_clean",
-            F.when(F.col("_drop_pos").isNull(), F.col(text_col)).otherwise(
-                rebuilt
-            ),
-        )
-        .drop("_drop_pos")
+    return _rewrite_without(
+        df,
+        per,
+        id_col,
+        text_col,
+        "text_clean",
+        sep,
+        extra={
+            "n_spans": F.coalesce(F.col("n_spans"), F.lit(0)),
+            "tokens_removed": F.coalesce(F.col("tokens_removed"), F.lit(0)),
+        },
     )
 
 
@@ -1135,8 +1053,7 @@ def minhash_signatures_portable(
     path; this one exists so an external system (the DuckDB oracle, a
     second pipeline) can verify or join signatures exactly.  Output is
     one scalar column per hash (h0..h{n-1}) — catalog-safe schema."""
-    sh = shingles(F.col(text_col), k=shingle_k)
-    base = df.select(F.col(id_col).alias("id"), sh.alias("_sh"))
+    sh = _shingle_sets(df, id_col, text_col, shingle_k)
 
     # NB: a two-parameter lambda would make F.transform bind the SECOND
     # parameter to the array index — the family tag must enter via a
@@ -1148,10 +1065,10 @@ def minhash_signatures_portable(
         ).cast("long")
 
     cols = [
-        F.array_min(F.transform(F.col("_sh"), family(i))).alias(f"h{i}")
+        F.array_min(F.transform(F.col("sh"), family(i))).alias(f"h{i}")
         for i in range(num_hashes)
     ]
-    return base.select("id", *cols)
+    return sh.select("id", *cols)
 
 
 # ---------------------------------------------------------------------------
@@ -1214,22 +1131,17 @@ def minhash_candidate_pairs_portable(
     (see the lsh_banding_pr_eval catalog entry).  Ships melted
     (fam, h, id) keys only; the match join's output is collision-
     bounded, never corpus-quadratic."""
-    sigs = minhash_signatures_portable(
-        df, id_col, text_col, shingle_k=shingle_k, num_hashes=num_hashes
+    melted = melted_minhash_signatures(
+        df, id_col, text_col, shingle_k, num_hashes, family="md5"
     )
-    melted = sigs.select(
-        "id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("fam"), F.col(f"h{i}").alias("h")
-                    )
-                    for i in range(num_hashes)
-                ]
-            )
-        ).alias("fh"),
-    ).select("id", F.col("fh.fam").alias("fam"), F.col("fh.h").alias("h"))
+    return _vote_pairs(melted, min_matches)
+
+
+def _vote_pairs(melted: DataFrame, min_matches: int) -> DataFrame:
+    """(id_a, id_b, n_match): the pairs of ids (id_a < id_b) of a melted
+    ``(id, fam, h)`` signature frame that share at least
+    ``min_matches`` family minima — one ``(fam, h)`` self-join and one
+    count per pair."""
     a = melted.select(F.col("id").alias("id_a"), "fam", "h")
     b = melted.select(F.col("id").alias("id_b"), "fam", "h")
     return (
@@ -1263,17 +1175,11 @@ def near_duplicate_clusters_portable(
     near_duplicate_clusters: the match join ships (hash, id) pairs, the
     component iteration runs on the pair graph only, and the corpus is
     touched once at the end for singleton ids."""
-    from spark_monotasks_spark.graph.algorithms import connected_components_star
-
     edges = minhash_candidate_pairs_portable(
         df, id_col, text_col, shingle_k, num_hashes, min_matches
     ).select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
     comps = connected_components_star(edges, reliable=reliable)
-    return (
-        df.select(F.col(id_col).alias("id"))
-        .join(comps, on="id", how="left")
-        .select("id", F.coalesce("component", F.col("id")).alias("cluster"))
-    )
+    return _component_labels(df.select(F.col(id_col).alias("id")), comps)
 
 
 # ---------------------------------------------------------------------------
@@ -1410,13 +1316,10 @@ def melted_minhash_signatures(
             "id", F.col("fh.fam").alias("fam"), F.col("fh.h").alias("h")
         )
     if family == "md5mod":
-        sh = shingles(F.col(text_col), k=shingle_k)
         # explode_outer: a NULL-text doc keeps its (fam, NULL) rows,
-        # matching the wide families' array_min(NULL) = NULL semantics;
-        # _spread: see _gram_occurrences — md5 of every (shingle, fam)
-        # must not run on a one-split scan
-        rows = _spread(df).select(
-            F.col(id_col).alias("id"), F.explode_outer(sh).alias("_s")
+        # matching the wide families' array_min(NULL) = NULL semantics
+        rows = _shingle_sets(df, id_col, text_col, shingle_k).select(
+            "id", F.explode_outer("sh").alias("_s")
         )
         d = F.md5(F.col("_s").cast("binary"))
         hs = rows.select(
@@ -1486,24 +1389,21 @@ def incremental_minhash_dedup(
     per batch and none.  The within-batch CC runs on the candidate-pair
     graph only (O(log n) star rounds; ``reliable=True`` for durable
     checkpoints)."""
-    from spark_monotasks_spark.graph.algorithms import connected_components_star
-
-    melted = melted_minhash_signatures(
-        batch, id_col, text_col, shingle_k, num_hashes, family
-    )
     # materialized once: the melted index feeds the history probe, BOTH
     # sides of the within-batch self-join, and the store delta — without
     # a pin each consumer would re-scan the batch and re-hash every
-    # shingle (same rationale as minhash_near_duplicates' barrier).
-    # persist(), not localCheckpoint, on the non-reliable path (r7):
-    # melted is multi-consumer but NOT iterative, so it needs reuse,
-    # not a lineage cut — persist keeps AQE planning below it and
-    # measured ~40% faster end-to-end (5.97s -> 3.68s at sf0.1
-    # together with the edges pin below); MEMORY_AND_DISK spills
-    # rather than OOMs at scale and the ContextCleaner reaps the
-    # blocks when the caller drops the plan.  reliable=True still
-    # takes the durable checkpoint (executor-churn posture).
-    melted = barrier(melted, reliable) if reliable else melted.persist()
+    # shingle.  persist(), not localCheckpoint, on the non-reliable
+    # path (r7): melted is multi-consumer but NOT iterative, so it
+    # needs reuse, not a lineage cut — persist keeps AQE planning below
+    # it and measured ~40% faster end-to-end (5.97s -> 3.68s at sf0.1
+    # together with the edges pin below).  Both pins live until
+    # unpersist (see barrier.pin): the CacheManager entry holds them,
+    # so the ContextCleaner does not reap them when the caller drops
+    # the plan.
+    melted = pin(
+        melted_minhash_signatures(batch, id_col, text_col, shingle_k, num_hashes, family),
+        reliable,
+    )
     if store is not None:
         hits = (
             melted.join(
@@ -1518,27 +1418,21 @@ def incremental_minhash_dedup(
         )
     else:
         hits = melted.select("id").limit(0)
-    a = melted.select(F.col("id").alias("id_a"), "fam", "h")
-    b = melted.select(F.col("id").alias("id_b"), "fam", "h")
     edges = (
-        a.join(b, on=["fam", "h"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .groupBy("id_a", "id_b")
-        .agg(F.count("*").alias("_n"))
-        .filter(F.col("_n") >= min_matches)
+        _vote_pairs(melted, min_matches)
         .select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
         # pinned: connected_components_star consumes its edge input
         # twice (the canon barrier AND the vertex-universe distinct) —
-        # without the cache the candidate self-join above runs twice
+        # without the cache the candidate self-join above runs twice.
+        # AQE plans that self-join as a broadcast, so the pin also keeps
+        # its hash relation in the driver; dropping the pin measured
+        # slower cold, so it stays
         .persist()
     )
     comps = connected_components_star(edges, reliable=reliable)
-    clustered = (
-        batch.select(F.col(id_col).alias("id"))
-        .join(comps, on="id", how="left")
-        .select("id", F.coalesce("component", F.col("id")).alias("cluster"))
-        .join(hits.withColumn("_hit", F.lit(True)), on="id", how="left")
-    )
+    clustered = _component_labels(
+        batch.select(F.col(id_col).alias("id")), comps
+    ).join(hits.withColumn("_hit", F.lit(True)), on="id", how="left")
     clean_keepers = (
         clustered.groupBy("cluster")
         .agg(

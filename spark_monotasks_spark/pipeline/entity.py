@@ -25,7 +25,10 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from spark_monotasks_spark.graph.algorithms import connected_components_star
+from spark_monotasks_spark.graph.algorithms import (
+    _component_labels,
+    connected_components_star,
+)
 
 
 def blocked_entity_resolution(
@@ -62,10 +65,5 @@ def blocked_entity_resolution(
         )
     )
     comp = connected_components_star(edges)
-    return (
-        records.select(F.col(rid_col).alias("rid"))
-        .join(comp, F.col("rid") == F.col("id"), "left")
-        .select(
-            "rid", F.coalesce(F.col("component"), F.col("rid")).alias("cluster")
-        )
-    )
+    ids = records.select(F.col(rid_col).alias("id"))
+    return _component_labels(ids, comp).withColumnRenamed("id", "rid")

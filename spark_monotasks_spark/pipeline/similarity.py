@@ -366,7 +366,7 @@ def semantic_dedup(
     literal dyadic centroids (:func:`ivf_literal_centroids`) the whole
     operator — assignment, pair set, closure, survivor choice — is
     replayable by an external SQL engine."""
-    from spark_monotasks_spark.barrier import barrier
+    from spark_monotasks_spark.barrier import pin
     from spark_monotasks_spark.graph.algorithms import (
         connected_components_star,
     )
@@ -374,10 +374,10 @@ def semantic_dedup(
     # pinned for its 3 consumers (both self-join sides + the survivor
     # anti-join); persist on the non-reliable path per the r7
     # measurement (cold cost ~2x under localCheckpoint, AQE preserved)
-    _assigned = ivf_assign(embeddings, centroids, id_col, vec_col).select(
+    assigned = ivf_assign(embeddings, centroids, id_col, vec_col).select(
         F.col(id_col).alias("id"), F.col(vec_col).alias("_v"), "cell"
     )
-    assigned = barrier(_assigned, reliable) if reliable else _assigned.persist()
+    assigned = pin(assigned, reliable)
     a = assigned.select(
         F.col("id").alias("id_a"), F.col("_v").alias("_va"), "cell"
     )

@@ -1926,6 +1926,49 @@ def temperature_mixture_sample(
 
 
 # ---------------------------------------------------------------------------
+# drop-set rewrite (shared by boilerplate, segment, span and scrub cuts)
+# ---------------------------------------------------------------------------
+
+def _rewrite_without(
+    df: DataFrame,
+    drops: DataFrame,
+    id_col: str,
+    text_col: str,
+    out_col: str,
+    sep: str,
+    unit: int = 1,
+    extra: dict[str, Column] | None = None,
+) -> DataFrame:
+    """Join the per-doc drop sets ``drops`` (``id_col``, ``_drop_pos``)
+    back to ``df`` and add ``out_col``: the text split on ``sep``, less
+    every part whose index div ``unit`` is in the drop set, re-joined
+    with ``sep``.  Then add the ``extra`` columns, which may read
+    ``_drop_pos``; it is dropped last.
+
+    Only the drop sets shuffle back to the doc partition; the text
+    never does, and the rebuild is a map-side array filter.  Documents
+    without a drop set (NULL after the left join) keep their text
+    VERBATIM without entering the filter lambda, which is interpreted
+    per element and is the expensive part (measured ~10% faster
+    end-to-end at sf0.1 where 40% of docs are untouched).  For
+    sep-canonical text (single separators, no leading/trailing)
+    verbatim equals re-joined, asserted over random corpora in
+    tests/test_merge_properties.py."""
+    parts = F.split(F.col(text_col), re.escape(sep))
+    drop = F.col("_drop_pos")
+    index = (lambda i: i) if unit == 1 else (lambda i: F.floor(i / unit).cast("int"))
+    kept = F.filter(
+        parts, lambda p, i: ~F.coalesce(F.array_contains(drop, index(i)), F.lit(False))
+    )
+    rebuilt = F.when(drop.isNull(), F.col(text_col)).otherwise(F.concat_ws(sep, kept))
+    return (
+        df.join(drops, on=id_col, how="left")
+        .withColumns({out_col: rebuilt, **(extra or {})})
+        .drop("_drop_pos")
+    )
+
+
+# ---------------------------------------------------------------------------
 # boilerplate line removal (CCNet §4.1 / RefinedWeb line-wise filtering)
 # ---------------------------------------------------------------------------
 
@@ -2003,9 +2046,8 @@ def remove_boilerplate(
     shuffle #1 aggregates 16-byte line fingerprints into the (small)
     boilerplate set; matching it back is a join on those fingerprints
     carrying (id, pos) only; shuffle #2 ships per-doc drop-position
-    SETS to the doc partition; the rebuild is a map-side array filter
-    over the re-split original text, and untouched documents pass
-    their text through verbatim without entering the lambda chain."""
+    SETS to the doc partition; the rebuild is :func:`_rewrite_without`
+    with the line as the unit."""
     gcols = [group_col] if group_col else []
     occ = _line_occurrences(df, id_col, text_col, group_col)
     bp = boilerplate_line_fps(df, id_col, text_col, group_col, min_docs)
@@ -2015,27 +2057,19 @@ def remove_boilerplate(
         .agg(F.collect_set("pos").alias("_drop_pos"))
         .withColumnRenamed("id", id_col)
     )
-    lines = F.split(F.col(text_col), "\n")
-    kept = F.filter(
-        F.transform(lines, lambda s, i: F.struct(s.alias("l"), i.alias("i"))),
-        lambda x: ~F.coalesce(
-            F.array_contains(F.col("_drop_pos"), x["i"]), F.lit(False)
-        ),
-    )
-    rebuilt = F.concat_ws("\n", F.transform(kept, lambda x: x["l"]))
-    n_total = F.size(lines)
+    n_total = F.size(F.split(F.col(text_col), "\n"))
     n_drop = F.coalesce(F.size("_drop_pos"), F.lit(0))
-    return (
-        df.join(drops, on=id_col, how="left")
-        .withColumn(
-            "text_clean",
-            F.when(F.col("_drop_pos").isNull(), F.col(text_col)).otherwise(
-                rebuilt
-            ),
-        )
-        .withColumn("n_lines_kept", (n_total - n_drop).cast("long"))
-        .withColumn("n_lines_removed", n_drop.cast("long"))
-        .drop("_drop_pos")
+    return _rewrite_without(
+        df,
+        drops,
+        id_col,
+        text_col,
+        "text_clean",
+        "\n",
+        extra={
+            "n_lines_kept": (n_total - n_drop).cast("long"),
+            "n_lines_removed": n_drop.cast("long"),
+        },
     )
 
 

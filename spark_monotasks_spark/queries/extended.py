@@ -2283,7 +2283,10 @@ def graph_cc_star_chains(spark: SparkSession, sf_dir: str) -> DataFrame:
     is worst at (O(chain length) rounds) and star converges on in
     O(log n).  Closed form the oracle can state: component = min
     orderkey within the customer."""
-    from spark_monotasks_spark.graph import connected_components_star
+    from spark_monotasks_spark.graph.algorithms import (
+        _component_labels,
+        connected_components_star,
+    )
 
     t = _t(spark, sf_dir)
     w = Window.partitionBy("o_custkey").orderBy("o_orderkey")
@@ -2305,13 +2308,9 @@ def graph_cc_star_chains(spark: SparkSession, sf_dir: str) -> DataFrame:
     # otherwise union-find these chains on the driver at sf<=0.01)
     comps = connected_components_star(chain, small_graph_threshold=0)
     # single-order customers produce no edge: they are their own
-    # component, recovered by the left join + coalesce
-    return (
-        t["orders"]
-        .select(F.col("o_orderkey").cast("long").alias("id"))
-        .join(comps, on="id", how="left")
-        .select("id", F.coalesce("component", F.col("id")).alias("component"))
-    )
+    # component
+    ids = t["orders"].select(F.col("o_orderkey").cast("long").alias("id"))
+    return _component_labels(ids, comps, "component")
 
 
 @register("graph_svdpp_train")  # iterative float factorization — rows-only

@@ -185,6 +185,28 @@ def test_signature_builders_make_few_py4j_calls(spark, docs_with_dups):
         assert n[0] <= 300, (build.__name__, n[0])
 
 
+def test_trace_compare_reports_counter_differences():
+    """``tools/trace_query.py --compare`` names each exact counter that
+    moved, per pass and entry, and ignores the counters that vary
+    between identical runs (compiles, tasks, times)."""
+    from tools.trace_query import compare
+
+    base = {"cold": [{"name": "q", "metrics": {
+        "sched.jobs": 2, "cache.pins": 1, "sched.tasks": 8, "wall_s": 1.0}}]}
+    same = {"cold": [{"name": "q", "metrics": {
+        "sched.jobs": 2, "cache.pins": 1, "sched.tasks": 9, "wall_s": 2.0}}]}
+    moved = {"cold": [
+        {"name": "q", "metrics": {"sched.jobs": 3, "cache.pins": 0}},
+        {"name": "new", "metrics": {}},
+    ]}
+    assert compare(same, base) == []
+    assert compare(moved, base) == [
+        "cold/q: sched.jobs 2 -> 3",
+        "cold/q: cache.pins 1 -> 0",
+        "cold/new: not in the base run",
+    ]
+
+
 # --- ngram jaccard ---------------------------------------------------------
 
 def test_ngram_jaccard_exact_values(spark):
@@ -2524,6 +2546,140 @@ def test_exact_substring_span_families_agree_on_corpus(spark):
                dedup.duplicate_span_positions(
                    docs, min_tokens=5, fingerprint="md5").collect())
     assert a == b and len(a) > 0
+
+
+#: sha256 of the sorted rows of each near-duplicate result that no
+#: DuckDB oracle covers, over the sf0.001 test corpus
+_NEAR_DUP_DIGESTS = {
+    "contaminated_span_positions_xxhash128": (
+        "5482095e3609bcf8bc29c8986335385530504712e8b75dd4b9cda48fa93f39aa"
+    ),
+    "drop_duplicate_spans": (
+        "be9520db382453e022c68bec3d490700d0dda969736a42f7de895dc772da110e"
+    ),
+    "drop_near_duplicates": (
+        "0a4094d502e45ebf60b3d0fb8c83cc34b5cd72f40869adef3770dfba39b5f8f1"
+    ),
+    "duplicate_segment_positions_md5": (
+        "d06128a6418996fbb8f628459fade30794368f90a77a9341e23372a6b0f93d26"
+    ),
+    "exact_substring_spans_scale": (
+        "b70f175f6f479712eab1b1b721911fac7dbbd47e065b9886e24f1f5e486356f3"
+    ),
+    "incremental_minhash_scale": (
+        "0f87a200486e1d82c3f2037eb13ec41c4f3864c6ec08dd8bef6e6015ba0eb4a2"
+    ),
+    "melted_md5": (
+        "0bd82f737f0a485c5d743fe61a881b00ad15ed154b054270ba07427f83a10d1c"
+    ),
+    "melted_md5mod": (
+        "ae38a956d6fb5d267b75cf2c9967d928f0ec55d94c101bfd40e4dcc633851a77"
+    ),
+    "melted_xxhash64": (
+        "f916aae6190b09e67ac9162d438ff841c67e5aa29d8cac7f72be1c80c821bb3f"
+    ),
+    "near_dup_clusters": (
+        "07f5ace0159b6b889f4f47e13ce78d3883aac540c470bceccad95ad0a6ec6683"
+    ),
+}
+
+
+def test_near_dup_rows_pinned(spark, tables):
+    """The near-duplicate operators share their building blocks, so a
+    rewrite of one block reaches every operator that calls it.  Pin the
+    rows of the results no oracle checks: the rows-only catalog
+    entries and the public functions without a catalog entry."""
+    import hashlib
+
+    from tests.conftest import SF_TEST_DIR
+
+    from spark_monotasks_spark.queries import QUERY_REGISTRY
+
+    def digest(df):
+        rows = sorted(tuple(r) for r in df.collect())
+        return hashlib.sha256(repr(rows).encode()).hexdigest()
+
+    docs = tables["documents"].select("doc_id", "text")
+    reference = docs.filter(F.col("doc_id") % 5 == 0)
+    got = {
+        name: digest(QUERY_REGISTRY[name](spark, SF_TEST_DIR))
+        for name in (
+            "near_dup_clusters",
+            "incremental_minhash_scale",
+            "exact_substring_spans_scale",
+        )
+    }
+    got["drop_duplicate_spans"] = digest(dedup.drop_duplicate_spans(docs, min_tokens=5))
+    got["drop_near_duplicates"] = digest(dedup.drop_near_duplicates(docs))
+    got["duplicate_segment_positions_md5"] = digest(
+        dedup.duplicate_segment_positions(docs, fingerprint="md5")
+    )
+    got["contaminated_span_positions_xxhash128"] = digest(
+        dedup.contaminated_span_positions(docs, reference, fingerprint="xxhash128")
+    )
+    for family in ("xxhash64", "md5", "md5mod"):
+        got[f"melted_{family}"] = digest(
+            dedup.melted_minhash_signatures(docs, family=family)
+        )
+    assert got == _NEAR_DUP_DIGESTS
+
+
+def test_span_and_segment_widths_below_one_rejected(spark):
+    """A width below 1 has no grams or segments.  At 0 the span
+    operators reported inverted spans and emptied documents; a negative
+    width failed late, inside a task.  Each operator refuses it when
+    the plan is built."""
+    df = spark.createDataFrame([(0, "a b c d")], "doc_id long, text string")
+    for width in (0, -2):
+        calls = [
+            lambda: dedup.duplicate_span_positions(df, min_tokens=width),
+            lambda: dedup.drop_duplicate_spans(df, min_tokens=width),
+            lambda: dedup.contaminated_span_positions(df, df, min_tokens=width),
+            lambda: dedup.scrub_contaminated_spans(df, df, min_tokens=width),
+            lambda: dedup.duplicate_segment_positions(df, seg_tokens=width),
+            lambda: dedup.drop_duplicate_segments(df, seg_tokens=width),
+        ]
+        for call in calls:
+            with pytest.raises(ValueError, match="at least 1"):
+                call()
+
+
+def test_shingle_passes_spread_one_split_input(spark, tmp_path):
+    """Shingling is the CPU-heavy front of the near-duplicate operators.
+    On a one-split scan, each operator below must spread the rows
+    round-robin before the projection that builds the shingle sets,
+    or the whole pass runs in one task."""
+    from tools.trace_query import physical_nodes
+
+    path = str(tmp_path / "docs")
+    rows = [(i, f"w{i % 7} w{i % 5} w{i % 3} common tail words") for i in range(40)]
+    spark.createDataFrame(rows, "doc_id long, text string").coalesce(1).write.parquet(
+        path
+    )
+    docs = spark.read.parquet(path)
+    assert docs.rdd.getNumPartitions() == 1
+
+    def spread_below_shingles(df):
+        df.collect()
+        for node in physical_nodes(df._jdf.queryExecution().executedPlan()):
+            if node.getClass().getSimpleName() == "ProjectExec" and (
+                "split(" in node.toString()
+            ):
+                return any(
+                    "RoundRobinPartitioning" in n.toString()
+                    for n in physical_nodes(node)
+                    if n.getClass().getSimpleName() == "ShuffleExchangeExec"
+                )
+        raise AssertionError("no shingle projection in the plan")
+
+    built = {
+        "minhash_signatures_portable": dedup.minhash_signatures_portable(docs),
+        "ngram_jaccard_pairs": dedup.ngram_jaccard_pairs(docs, allow_unblocked=True),
+        "containment_pairs": dedup.containment_pairs(docs, allow_unblocked=True),
+    }
+    assert {k: spread_below_shingles(v) for k, v in built.items()} == dict.fromkeys(
+        built, True
+    )
 
 
 # --- prefix-filtered exact Jaccard join --------------------------------------

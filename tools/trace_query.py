@@ -1,6 +1,7 @@
 """Per-layer ledger of named catalog entries, cold then warm, in one session.
 
 Usage: python tools/trace_query.py NAME [NAME ...] [--sf DIR] [--json PATH]
+                                   [--compare BASE.json]
 
 Opens one session with ``bench.open_session`` (a first job, the Python
 worker pool, the staged MinHash store), then runs every
@@ -23,7 +24,11 @@ session such a pin keeps the broadcast hash relation (one 64 MiB page
 for a multi-column or string key) in the driver for as long as the
 entry lives.  A warm pass reuses the
 cold pass's entries, so its pins read 0.  ``--json`` writes every
-ledger metric.
+ledger metric.  ``--compare BASE.json`` checks this run against a saved
+``--json`` run: for each entry and pass it prints the counters that
+differ (perfbench's exact counters, ``report.EXACT``, plus ``cache.pins``
+and ``cache.pin_bcast``) and exits 1 on any difference.  Compile and
+task counts vary between identical runs, so they are not compared.
 
 Never run it concurrently with other Spark work on the same host.
 """
@@ -132,6 +137,29 @@ def new_pins(spark):
         )
 
 
+def compare(passes: dict, base: dict) -> list[str]:
+    """One line per counter of ``passes`` that differs from ``base``
+    (both as ``--json`` writes them), or per entry missing from
+    ``base``."""
+    from report import EXACT
+
+    keys = (*EXACT, "cache.pins", "cache.pin_bcast")
+    diffs = []
+    for pass_name, ledgers in passes.items():
+        old = {led["name"]: led["metrics"] for led in base.get(pass_name, [])}
+        for led in ledgers:
+            name, new = led["name"], led["metrics"]
+            if name not in old:
+                diffs.append(f"{pass_name}/{name}: not in the base run")
+                continue
+            diffs.extend(
+                f"{pass_name}/{name}: {k} {old[name].get(k, 0)} -> {new.get(k, 0)}"
+                for k in keys
+                if old[name].get(k, 0) != new.get(k, 0)
+            )
+    return diffs
+
+
 def _row(name: str, metrics: dict) -> str:
     cells = []
     for _, key, width, decimals in COLUMNS:
@@ -149,6 +177,9 @@ def main() -> None:
     p.add_argument("names", nargs="+")
     p.add_argument("--sf", default=tables.DEFAULT_SF_DIR)
     p.add_argument("--json", help="write every pass's ledgers here")
+    p.add_argument(
+        "--compare", metavar="BASE.json", help="exit 1 on a counter unlike this run's"
+    )
     args = p.parse_args()
 
     from ledger import Ledger
@@ -201,6 +232,14 @@ def main() -> None:
     if args.json:
         with open(args.json, "w") as f:
             json.dump(passes, f, indent=1, sort_keys=True)
+    if args.compare:
+        with open(args.compare) as f:
+            diffs = compare(passes, json.load(f))
+        print(f"# counters against {args.compare}: {len(diffs) or 'none'} differ")
+        for line in diffs:
+            print(f"  {line}")
+        if diffs:
+            raise SystemExit(1)
 
 
 if __name__ == "__main__":
