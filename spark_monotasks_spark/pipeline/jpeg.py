@@ -8,6 +8,19 @@ piece — it parses DQT/DHT/SOF0/SOS, entropy-decodes the scan
 (Huffman + DC prediction + AC run-length), dequantizes, inverse-zigzags,
 applies the 2-D IDCT, and converts YCbCr→RGB.
 
+Both halves work on all blocks of an image at once.  The encoder takes
+the DCT of every block in one batched matmul, quantizes and zigzags them
+together, and builds the entropy-coded scan from the nonzero
+coefficients alone: each Huffman symbol with its amplitude bits becomes
+one (code, length) pair, and the pairs are expanded to bits and packed
+in numpy.  The decoder unstuffs the scan once and decodes each Huffman
+symbol with one lookup of the next 16 bits in a table that gives the
+symbol and its code length; it builds each table once per process and
+(bits, values) spec.  Dequantization, the IDCT and the colour transform
+then run over all blocks in one batched pass.  Both produce the same
+bytes and pixels as a per-block codec (the batched matmuls keep the
+per-block operand order and layout; see `encode_jpeg_pixels`).
+
 Scope guards (return None, never raise): progressive (SOF2), subsampled,
 arithmetic-coded, or >3-component streams.  Lossiness is the format's,
 not ours: roundtrip error is bounded by the quantization table (tests
@@ -16,6 +29,7 @@ assert mean-abs-error, and DC/means survive almost exactly).
 
 from __future__ import annotations
 
+import functools
 import struct
 
 import numpy as np
@@ -111,32 +125,45 @@ _AC_CHROMA = (
 )
 
 
-def _huff_encode_table(bits, values):
-    """(symbol → (code, length)) from a (bits, values) spec."""
-    out = {}
+def _canonical_codes(bits, values):
+    """(symbol, code, length) of each code of a (bits, values) spec, in
+    the canonical order of the standard (Annex C)."""
     code = 0
     k = 0
     for length in range(1, 17):
         for _ in range(bits[length - 1]):
-            out[values[k]] = (code, length)
+            yield values[k], code, length
             code += 1
             k += 1
         code <<= 1
-    return out
 
 
-def _huff_decode_table(bits, values):
-    """((length, code) → symbol) for the decoder."""
-    out = {}
-    code = 0
-    k = 0
-    for length in range(1, 17):
-        for _ in range(bits[length - 1]):
-            out[(length, code)] = values[k]
-            code += 1
-            k += 1
-        code <<= 1
-    return out
+def _huff_encode_table(bits, values) -> tuple[np.ndarray, np.ndarray]:
+    """(code, length) arrays indexed by symbol 0..255 from a (bits,
+    values) spec; length 0 marks a symbol the table cannot code."""
+    codes = np.zeros(256, dtype=np.int64)
+    lengths = np.zeros(256, dtype=np.int64)
+    for sym, code, length in _canonical_codes(bits, values):
+        codes[sym] = code
+        lengths[sym] = length
+    return codes, lengths
+
+
+@functools.lru_cache(maxsize=64)
+def _huff_lookup(bits: bytes, values: bytes) -> tuple[bytes, bytes]:
+    """Decoder table for a (bits, values) spec, as (symbols, lengths):
+    the next 16 bits of the scan, read as an index, give the symbol and
+    its code length; length 0 means that no code starts with those bits.
+    Canonical codes are prefix-free, so their index ranges are disjoint;
+    a code that overflows its length never matches."""
+    symbols = np.zeros(1 << 16, dtype=np.uint8)
+    lengths = np.zeros(1 << 16, dtype=np.uint8)
+    for sym, code, n in _canonical_codes(bits, values):
+        if code < 1 << n:
+            lo, hi = code << (16 - n), (code + 1) << (16 - n)
+            symbols[lo:hi] = sym
+            lengths[lo:hi] = n
+    return symbols.tobytes(), lengths.tobytes()
 
 
 _DCT = np.zeros((8, 8))
@@ -144,6 +171,19 @@ for _u in range(8):
     for _x in range(8):
         _c = np.sqrt(0.125) if _u == 0 else 0.5
         _DCT[_u, _x] = _c * np.cos((2 * _x + 1) * _u * np.pi / 16)
+
+#: encoder tables, (2, 256) each: row 0 luma, row 1 chroma
+_DC_CODES, _DC_LENS = map(np.stack, zip(
+    _huff_encode_table(*_DC_LUMA), _huff_encode_table(*_DC_CHROMA)))
+_AC_CODES, _AC_LENS = map(np.stack, zip(
+    _huff_encode_table(*_AC_LUMA), _huff_encode_table(*_AC_CHROMA)))
+#: r ZRL codes (16 zeros each) back to back for r = 0..3, (2, 4) each:
+#: the run of zeros before a nonzero AC coefficient is at most 62
+_ZRL_LENS = _AC_LENS[:, 0xF0, None] * np.arange(4)
+_ZRL_CODES = np.array([
+    [sum(int(c) << (int(n) * i) for i in range(r)) for r in range(4)]
+    for c, n in zip(_AC_CODES[:, 0xF0], _AC_LENS[:, 0xF0])
+], dtype=np.int64)
 
 
 def _rgb_to_ycbcr(rgb: np.ndarray) -> np.ndarray:
@@ -162,36 +202,59 @@ def _ycbcr_to_rgb(ycc: np.ndarray) -> np.ndarray:
     return np.stack([r, g, b], axis=-1)
 
 
-class _BitWriter:
-    def __init__(self):
-        self.out = bytearray()
-        self.acc = 0
-        self.nbits = 0
-
-    def put(self, code: int, length: int) -> None:
-        self.acc = (self.acc << length) | (code & ((1 << length) - 1))
-        self.nbits += length
-        while self.nbits >= 8:
-            self.nbits -= 8
-            byte = (self.acc >> self.nbits) & 0xFF
-            self.out.append(byte)
-            if byte == 0xFF:  # byte stuffing
-                self.out.append(0x00)
-
-    def flush(self) -> bytes:
-        if self.nbits:
-            pad = 8 - self.nbits
-            self.put((1 << pad) - 1, pad)  # pad with 1s per spec
-        return bytes(self.out)
-
-
-def _magnitude(v: int) -> tuple[int, int]:
-    """JPEG magnitude coding: value → (size, amplitude bits)."""
-    if v == 0:
-        return 0, 0
-    size = int(v).bit_length() if v > 0 else int(-v).bit_length()
-    amp = v if v > 0 else v + (1 << size) - 1
+def _magnitude(v: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """JPEG magnitude coding: values → (sizes, amplitude bits)."""
+    size = np.frexp(np.abs(v))[1].astype(np.int64)  # bit length; 0 for 0
+    amp = np.where(v < 0, v + (np.int64(1) << size) - 1, v)
     return size, amp
+
+
+def _entropy_encode(zz: np.ndarray) -> bytes:
+    """Scan bytes for (n, 64) zigzag-ordered quantized coefficients, one
+    row per block and component in scan order (Y, Cb, Cr per block)."""
+    n = len(zz)
+    tab = np.tile([0, 1, 1], n // 3)  # luma or chroma tables per row
+    # DC: the difference to the previous block of the same component
+    size, amp = _magnitude(
+        np.diff(zz[:, 0].reshape(-1, 3), axis=0, prepend=0).ravel())
+    dc_len = _DC_LENS[tab, size]
+    dc = ((_DC_CODES[tab, size] << size) | amp, dc_len + size)
+    # AC: per nonzero coefficient, its ZRLs and run/size symbol, then
+    # its amplitude bits, as one item
+    row, k = np.nonzero(zz[:, 1:])
+    k += 1
+    first = np.concatenate([[True], row[1:] != row[:-1]])
+    run = k - 1 - np.where(first, 0, np.roll(k, 1))
+    size, amp = _magnitude(zz[row, k])
+    t = tab[row]
+    rs = ((run & 15) << 4) | size
+    sym_len = _AC_LENS[t, rs]
+    if not (dc_len.all() and sym_len.all()):
+        raise ValueError("coefficient outside the baseline Huffman tables")
+    zrl = run >> 4
+    ac = (
+        (((_ZRL_CODES[t, zrl] << sym_len) | _AC_CODES[t, rs]) << size) | amp,
+        _ZRL_LENS[t, zrl] + sym_len + size,
+    )
+    # EOB unless the last (63rd) coefficient is nonzero
+    eob = np.flatnonzero(zz[:, 63] == 0)
+    end = (_AC_CODES[tab[eob], 0x00], _AC_LENS[tab[eob], 0x00])
+    # each row's DC item, then its AC items in order, then its EOB
+    order = np.argsort(np.concatenate(
+        [np.arange(n) * 65, row * 65 + k, eob * 65 + 64]))
+    codes, lengths = (np.concatenate(p)[order] for p in zip(dc, ac, end))
+    return _pack_bits(codes, lengths)
+
+
+def _pack_bits(codes: np.ndarray, lengths: np.ndarray) -> bytes:
+    """Concatenate (code, length) pairs MSB first, pad the last byte with
+    1s and stuff a 0x00 after every 0xFF byte."""
+    total = int(lengths.sum())
+    item = np.repeat(np.arange(len(lengths)), lengths)
+    shift = np.cumsum(lengths)[item] - 1 - np.arange(total)
+    bits = ((codes[item] >> shift) & 1).astype(np.uint8)
+    bits = np.concatenate([bits, np.ones(-total % 8, dtype=np.uint8)])
+    return np.packbits(bits).tobytes().replace(b"\xff", b"\xff\x00")
 
 
 def encode_jpeg_pixels(
@@ -201,10 +264,6 @@ def encode_jpeg_pixels(
     h, w, _ = rgb.shape
     qy = _scale_quant(_QUANT_LUMA, quality)
     qc = _scale_quant(_QUANT_CHROMA, quality)
-    dc_y = _huff_encode_table(*_DC_LUMA)
-    ac_y = _huff_encode_table(*_AC_LUMA)
-    dc_c = _huff_encode_table(*_DC_CHROMA)
-    ac_c = _huff_encode_table(*_AC_CHROMA)
 
     ph = (h + 7) // 8 * 8
     pw = (w + 7) // 8 * 8
@@ -214,44 +273,13 @@ def encode_jpeg_pixels(
     padded[:, w:] = padded[:, w - 1: w]
     ycc = _rgb_to_ycbcr(padded) - 128.0
 
-    writer = _BitWriter()
-    prev_dc = [0, 0, 0]
-    for by in range(0, ph, 8):
-        for bx in range(0, pw, 8):
-            for comp in range(3):
-                block = ycc[by: by + 8, bx: bx + 8, comp]
-                coef = _DCT @ block @ _DCT.T
-                q = qy if comp == 0 else qc
-                quant = np.round(coef.ravel() / q.reshape(8, 8).ravel()).astype(int)
-                zz = quant[_ZIGZAG]
-                dc_tab = dc_y if comp == 0 else dc_c
-                ac_tab = ac_y if comp == 0 else ac_c
-                diff = int(zz[0]) - prev_dc[comp]
-                prev_dc[comp] = int(zz[0])
-                size, amp = _magnitude(diff)
-                code, length = dc_tab[size]
-                writer.put(code, length)
-                if size:
-                    writer.put(amp, size)
-                run = 0
-                for k in range(1, 64):
-                    v = int(zz[k])
-                    if v == 0:
-                        run += 1
-                        continue
-                    while run > 15:
-                        code, length = ac_tab[0xF0]  # ZRL
-                        writer.put(code, length)
-                        run -= 16
-                    size, amp = _magnitude(v)
-                    code, length = ac_tab[(run << 4) | size]
-                    writer.put(code, length)
-                    writer.put(amp, size)
-                    run = 0
-                if run:
-                    code, length = ac_tab[0x00]  # EOB
-                    writer.put(code, length)
-    scan = writer.flush()
+    # (block row, block col, component, 8, 8) as a strided view: numpy
+    # multiplies a non-contiguous operand in its own loop rather than
+    # BLAS, and the bytes depend on that rounding, so do not copy it
+    blocks = ycc.reshape(ph // 8, 8, pw // 8, 8, 3).transpose(0, 2, 4, 1, 3)
+    coef = np.matmul(np.matmul(_DCT, blocks), _DCT.T).reshape(-1, 3, 64)
+    quant = np.round(coef / np.stack([qy, qc, qc])).astype(int)
+    scan = _entropy_encode(quant[..., _ZIGZAG].reshape(-1, 64))
 
     def seg(marker: int, payload: bytes) -> bytes:
         return bytes([0xFF, marker]) + struct.pack(">H", len(payload) + 2) + payload
@@ -286,53 +314,82 @@ def encode_jpeg_pixels(
     )
 
 
-class _BitReader:
-    def __init__(self, data: bytes):
-        self.data = data
-        self.pos = 0
-        self.acc = 0
-        self.nbits = 0
+def _unstuff(data: bytes) -> bytes:
+    """The entropy-coded bytes before the first marker (an 0xFF not
+    followed by 0x00, or a trailing 0xFF), with each stuffed 0xFF 0x00
+    read as 0xFF."""
+    end = data.find(b"\xff")
+    while end >= 0 and data[end + 1: end + 2] == b"\x00":
+        end = data.find(b"\xff", end + 2)
+    return data[: len(data) if end < 0 else end].replace(b"\xff\x00", b"\xff")
 
-    def _fill(self) -> bool:
-        while self.nbits < 25:
-            if self.pos >= len(self.data):
-                return self.nbits > 0
-            byte = self.data[self.pos]
-            self.pos += 1
-            if byte == 0xFF:
-                if self.pos < len(self.data) and self.data[self.pos] == 0x00:
-                    self.pos += 1  # stuffed byte
+
+def _entropy_decode(scan: bytes, comps: list, nblocks: int):
+    """Huffman + DC prediction + AC run-length over an unstuffed scan.
+
+    ``comps`` holds per scan component (DC prediction key, DC table, AC
+    table), the tables as `_huff_lookup` returns them.  Returns the
+    coefficients as an int64 (nblocks, len(comps), 64) array in zigzag
+    order, or None when the scan runs out or holds no valid code."""
+    total = 8 * len(scan)
+    a = np.frombuffer(scan + bytes(4), dtype=np.uint8).astype(np.uint32)
+    # win[i]: the 32 bits from byte i on, so any read of up to 25 bits
+    # at bit p is one shift and mask of win[p >> 3]
+    win = ((a[:-3] << 24) | (a[1:-2] << 16) | (a[2:-1] << 8) | a[3:]).tolist()
+    pred = {c[0]: 0 for c in comps}
+    at, vals = [], []
+    p = 0
+    for blk in range(nblocks):
+        for ci, (key, (dc_sym, dc_len), (ac_sym, ac_len)) in enumerate(comps):
+            base = (blk * len(comps) + ci) * 64
+            x = (win[p >> 3] >> (16 - (p & 7))) & 0xFFFF
+            n = dc_len[x]
+            if not n or p + n > total:
+                return None
+            size = dc_sym[x]
+            p += n
+            if size:
+                if size > 25:
+                    # only a non-standard DHT codes such a size: the
+                    # read must fit in the whole bytes that reach 25
+                    # bits past p, or the blob is rejected
+                    if size > min(total, (p + 32) >> 3 << 3) - p:
+                        return None
+                    amp = (int.from_bytes(scan[p >> 3: (p >> 3) + 5].ljust(5, b"\0"), "big")
+                           >> (40 - (p & 7) - size)) & ((1 << size) - 1)
+                elif p + size > total:
+                    return None
                 else:
-                    self.pos -= 1  # a real marker: stop
-                    return self.nbits > 0
-            self.acc = (self.acc << 8) | byte
-            self.nbits += 8
-        return True
-
-    def get(self, n: int) -> int:
-        if n == 0:
-            return 0
-        self._fill()
-        if self.nbits < n:
-            raise EOFError
-        self.nbits -= n
-        return (self.acc >> self.nbits) & ((1 << n) - 1)
-
-
-def _huff_read(reader: _BitReader, table: dict) -> int:
-    code = 0
-    for length in range(1, 17):
-        code = (code << 1) | reader.get(1)
-        sym = table.get((length, code))
-        if sym is not None:
-            return sym
-    raise ValueError("invalid Huffman code")
-
-
-def _extend(amp: int, size: int) -> int:
-    if size == 0:
-        return 0
-    return amp if amp >= (1 << (size - 1)) else amp - (1 << size) + 1
+                    amp = (win[p >> 3] >> (32 - (p & 7) - size)) & ((1 << size) - 1)
+                p += size
+                pred[key] += amp if amp >> (size - 1) else amp - (1 << size) + 1
+            at.append(base)
+            vals.append(pred[key])
+            k = 1
+            while k < 64:
+                x = (win[p >> 3] >> (16 - (p & 7))) & 0xFFFF
+                n = ac_len[x]
+                if not n or p + n > total:
+                    return None
+                rs = ac_sym[x]
+                p += n
+                size = rs & 15
+                if not size:
+                    if rs == 0xF0:  # ZRL
+                        k += 16
+                        continue
+                    break  # EOB
+                k += rs >> 4
+                if k > 63 or p + size > total:
+                    return None
+                amp = (win[p >> 3] >> (32 - (p & 7) - size)) & ((1 << size) - 1)
+                p += size
+                at.append(base + k)
+                vals.append(amp if amp >> (size - 1) else amp - (1 << size) + 1)
+                k += 1
+    zz = np.zeros(nblocks * len(comps) * 64, dtype=np.int64)
+    zz[at] = vals
+    return zz.reshape(nblocks, len(comps), 64)
 
 
 def decode_jpeg_pixels(b: bytes):
@@ -343,7 +400,7 @@ def decode_jpeg_pixels(b: bytes):
         if not b or b[:2] != b"\xff\xd8":
             return None
         quant: dict[int, np.ndarray] = {}
-        huff: dict[tuple[int, int], dict] = {}
+        huff: dict[tuple[int, int], tuple[bytes, bytes]] = {}
         w = h = None
         comp_q: dict[int, int] = {}
         comp_tabs: dict[int, tuple[int, int]] = {}
@@ -385,10 +442,12 @@ def decode_jpeg_pixels(b: bytes):
                 p = 0
                 while p < len(payload):
                     cls, tid = payload[p] >> 4, payload[p] & 0xF
-                    bits = list(payload[p + 1: p + 17])
+                    bits = bytes(payload[p + 1: p + 17])
                     nvals = sum(bits)
-                    values = list(payload[p + 17: p + 17 + nvals])
-                    huff[(cls, tid)] = _huff_decode_table(bits, values)
+                    values = bytes(payload[p + 17: p + 17 + nvals])
+                    if len(bits) < 16 or len(values) < nvals:
+                        return None  # truncated table
+                    huff[(cls, tid)] = _huff_lookup(bits, values)
                     p += 17 + nvals
             elif marker == 0xDA:
                 ns = payload[0]
@@ -404,39 +463,23 @@ def decode_jpeg_pixels(b: bytes):
             i += 2 + length
         if scan_start is None or w is None:
             return None
-        reader = _BitReader(b[scan_start:])
-        ph, pw = (h + 7) // 8 * 8, (w + 7) // 8 * 8
-        out = np.zeros((ph, pw, 3), dtype=np.float64)
-        prev_dc = {cid: 0 for cid in comp_order}
-        for by in range(0, ph, 8):
-            for bx in range(0, pw, 8):
-                for ci, cid in enumerate(comp_order):
-                    dc_tid, ac_tid = comp_tabs[cid]
-                    dc_tab = huff[(0, dc_tid)]
-                    ac_tab = huff[(1, ac_tid)]
-                    zz = np.zeros(64, dtype=np.int64)
-                    size = _huff_read(reader, dc_tab)
-                    diff = _extend(reader.get(size), size)
-                    prev_dc[cid] += diff
-                    zz[0] = prev_dc[cid]
-                    k = 1
-                    while k < 64:
-                        rs = _huff_read(reader, ac_tab)
-                        run, size = rs >> 4, rs & 0xF
-                        if size == 0:
-                            if run == 15:
-                                k += 16
-                                continue
-                            break  # EOB
-                        k += run
-                        if k > 63:
-                            return None
-                        zz[k] = _extend(reader.get(size), size)
-                        k += 1
-                    coef = np.zeros(64, dtype=np.float64)
-                    coef[_ZIGZAG] = zz * quant[comp_q[cid]][_ZIGZAG]
-                    block = _DCT.T @ coef.reshape(8, 8) @ _DCT
-                    out[by: by + 8, bx: bx + 8, ci] = block
+        if not (h and w):
+            return np.zeros((h, w, 3), dtype=np.uint8)
+        nby, nbx = (h + 7) // 8, (w + 7) // 8
+        comps = [
+            (cid, huff[(0, comp_tabs[cid][0])], huff[(1, comp_tabs[cid][1])])
+            for cid in comp_order
+        ]
+        q = np.stack([quant[comp_q[cid]] for cid in comp_order])
+        zz = _entropy_decode(_unstuff(b[scan_start:]), comps, nby * nbx)
+        if zz is None:
+            return None
+        coef = np.zeros(zz.shape, dtype=np.float64)
+        coef[..., _ZIGZAG] = zz * q[:, _ZIGZAG]
+        blocks = np.matmul(
+            np.matmul(_DCT.T, coef.reshape(nby, nbx, 3, 8, 8)), _DCT
+        )
+        out = blocks.transpose(0, 3, 1, 4, 2).reshape(nby * 8, nbx * 8, 3)
         rgb = _ycbcr_to_rgb(out + 128.0)
         return np.clip(np.round(rgb[:h, :w]), 0, 255).astype(np.uint8)
     except Exception:

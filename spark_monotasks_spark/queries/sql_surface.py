@@ -701,7 +701,9 @@ def versioned_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     versions through time-travel reads.  The oracle states each
     snapshot's expected contents from the source parquet, so a match
     proves manifest-resolved reads return exactly the committed data —
-    v1 unchanged by the later commit."""
+    v1 unchanged by the later commit.  The two-row result is pinned
+    before the temporary table is removed."""
+    import shutil
     import tempfile
 
     from spark_monotasks_spark.sources import versioned as V
@@ -709,14 +711,6 @@ def versioned_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = load_tables(spark, sf_dir)
     path = tempfile.mkdtemp(prefix="versioned_tt_")
     o = t["orders"].select("o_orderkey", "o_totalprice")
-    V.write_version(o.filter(F.col("o_orderkey") <= 1000), path)
-    V.write_version(
-        o.filter(
-            (F.col("o_orderkey") > 1000) & (F.col("o_orderkey") <= 2000)
-        ),
-        path,
-        mode="append",
-    )
 
     def _agg(df: DataFrame, v: int) -> DataFrame:
         return df.agg(
@@ -725,6 +719,17 @@ def versioned_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.sum("o_totalprice"), 2).alias("total_price"),
         ).select("version", "n_orders", "total_price")
 
-    return _agg(V.read_version(spark, path, 1), 1).unionAll(
-        _agg(V.read_version(spark, path, 2), 2)
-    )
+    try:
+        V.write_version(o.filter(F.col("o_orderkey") <= 1000), path)
+        V.write_version(
+            o.filter(
+                (F.col("o_orderkey") > 1000) & (F.col("o_orderkey") <= 2000)
+            ),
+            path,
+            mode="append",
+        )
+        return _agg(V.read_version(spark, path, 1), 1).unionAll(
+            _agg(V.read_version(spark, path, 2), 2)
+        ).localCheckpoint()
+    finally:
+        shutil.rmtree(path, ignore_errors=True)

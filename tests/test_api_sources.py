@@ -506,6 +506,21 @@ def test_versioned_time_travel_and_isolation(spark, tmp_path):
     assert v1_reader.count() == 10
 
 
+def test_versioned_time_travel_removes_its_table(spark, tmp_path, monkeypatch):
+    """The catalog entry commits two versions into a temporary table and
+    must remove it before returning, as snapshot_diff does."""
+    import tempfile
+
+    from spark_monotasks_spark.queries.sql_surface import versioned_time_travel
+    from tests.conftest import SF_TEST_DIR
+
+    monkeypatch.setenv("TMPDIR", str(tmp_path))
+    monkeypatch.setattr(tempfile, "tempdir", None)
+    rows = versioned_time_travel(spark, SF_TEST_DIR).collect()
+    assert sorted(r.version for r in rows) == [1, 2]
+    assert not list(tmp_path.glob("versioned_tt_*"))
+
+
 def test_versioned_crash_retry_self_recovers(spark, tmp_path):
     """A data directory without a manifest (crashed writer) is invisible
     to readers, does NOT block the retry (per-attempt unique staging

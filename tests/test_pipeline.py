@@ -1483,6 +1483,88 @@ def test_jpeg_decode_stats_bounded_error(spark, tables):
         assert abs(r.mean_b - (expect + 2)) < 1.5
 
 
+#: sha256 of the codec's output over `_jpeg_pin_corpus`: encoded bytes,
+#: decoded pixels, and the decode of seeded truncations and byte flips
+#: (None included), so a rewrite of either codec half must be
+#: byte-identical and return None in the same cases
+_JPEG_PIN = {
+    "encoded": "c05497a32afed59be61f68e4c0156e317b332480e574363ab712c6e2beea9658",
+    "decoded": "22b09b21c35913cded54be0adf7bbc31d1fec61199df3053a612616eb982d822",
+    "damaged": "0527032a4a67c791883b2cefb656147f1a914d74e6b0254766eb8af1d45db32a",
+}
+
+
+def _jpeg_pin_corpus():
+    """(image, quality) pairs: catalog-shaped gradients and uniform noise,
+    sides 1-69 (1x1, non-multiples of 8), qualities 10, 50 and 92."""
+    import numpy as np
+
+    rng = np.random.default_rng(20261020)
+    sides = [(1, 1), (1, 8), (8, 1), (2, 3), (7, 9), (8, 8), (9, 16),
+             (17, 15), (24, 31), (40, 33), (48, 64), (13, 57), (69, 69)]
+    sides += [tuple(int(s) for s in rng.integers(1, 70, 2)) for _ in range(4)]
+    images = []
+    for h, w in sides:
+        x = np.arange(w)[None, :, None]
+        y = np.arange(h)[:, None, None]
+        c = np.arange(3)[None, None, :]
+        images.append(((x + y + c) % 256).astype(np.uint8))
+        images.append(rng.integers(0, 256, (h, w, 3), dtype=np.uint8))
+    return [(img, q) for img in images for q in (10, 50, 92)]
+
+
+def test_jpeg_codec_output_pinned():
+    import hashlib
+
+    import numpy as np
+
+    from spark_monotasks_spark.pipeline import jpeg
+
+    def digest(parts):
+        h = hashlib.sha256()
+        for p in parts:
+            h.update(b"None" if p is None else
+                     repr(p.shape).encode() + p.tobytes())
+        return h.hexdigest()
+
+    blobs = [jpeg.encode_jpeg_pixels(img, quality=q)
+             for img, q in _jpeg_pin_corpus()]
+    encoded = hashlib.sha256(b"".join(
+        len(b).to_bytes(4, "big") + b for b in blobs)).hexdigest()
+    decoded = [jpeg.decode_jpeg_pixels(b) for b in blobs]
+    assert all(d is not None for d in decoded)
+
+    rng = np.random.default_rng(7)
+    damaged = []
+    for b in blobs[::5]:
+        scan = b.find(b"\xff\xda") + 14  # SOS segment: 2 + 12 bytes
+        cut = int(rng.integers(scan, len(b)))
+        damaged.append(b[:cut])
+        flip = bytearray(b)
+        for at in rng.integers(scan, len(b) - 2, 3):
+            flip[at] ^= int(rng.integers(1, 256))
+        damaged.append(bytes(flip))
+    got = {
+        "encoded": encoded,
+        "decoded": digest(decoded),
+        "damaged": digest(jpeg.decode_jpeg_pixels(b) for b in damaged),
+    }
+    assert got == _JPEG_PIN
+
+    # out of profile or broken: None, never an exception
+    for b in blobs[::7]:
+        scan = b.find(b"\xff\xda") + 14
+        i = b.find(b"\xff\xc0")
+        assert jpeg.decode_jpeg_pixels(b[:-3]) is None  # truncated scan
+        assert jpeg.decode_jpeg_pixels(b[:scan]) is None  # no scan at all
+        assert jpeg.decode_jpeg_pixels(
+            b[:i] + b"\xff\xc2" + b[i + 2:]) is None  # progressive
+        assert jpeg.decode_jpeg_pixels(
+            b[:scan] + b"\xff\x00" * 4 + b"\xff\xd9") is None  # bad code
+        dht = b.find(b"\xff\xc4")
+        assert jpeg.decode_jpeg_pixels(b[:dht + 12]) is None  # cut in DHT
+
+
 # --- count-min sketch (pipeline/sketches.py) -------------------------------
 
 def test_cms_estimate_overestimates_and_exact_when_wide(spark):
